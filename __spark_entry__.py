@@ -27,8 +27,8 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 # Round-15 window (18 + 32 = 50): no new queries; the 18 entries whose
 # Spark side changed in the r15 optimization pass lead (the cdc_chunks
 # codegen family p117/p118/p119/p125/p127/p137, lsh_calibration's
-# shared staging p159, and every consumer routed through the new
-# config.stage_for_reuse staging sites: p18/p29/p146/p153, p102,
+# shared staging p159, and every consumer of the seven staging sites
+# that round made staging-mode aware: p18/p29/p146/p153, p102,
 # p162, p77/p109/p114/p121/p122) — all optimization-only rewrites
 # verified row-identical locally, listed so the driver re-certifies
 # them; the remaining 32 slots are the stale-evidence rotation (the

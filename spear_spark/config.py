@@ -124,17 +124,27 @@ class Settings:
         return Settings({**self._values, name: value})
 
 
-#: How corpus-sized intermediates are staged for multi-consumer /
-#: round-loop reuse (the lsh_verified_pairs / lsh_calibration /
-#: dedup_report / ivf_recall_curve / kmeans_lloyd / kcenter_coreset
-#: staging sites).  ``local`` (default): lazy ``localCheckpoint`` —
-#: executor-local blocks, MEMORY_AND_DISK, fastest, but NOT
-#: fault-tolerant: the blocks have no lineage, so losing one executor
-#: mid-query kills the job unrecoverably.  ``reliable``: a reliable
-#: ``checkpoint()`` into ``SparkContext.setCheckpointDir`` storage
-#: (HDFS/object store on a cluster) — survives executor loss at the
-#: cost of a write+read round-trip; the right setting for long-running
-#: 100 TB jobs where a lost executor must not waste hours of work.
+#: How every intermediate the operators materialize is staged: the
+#: multi-consumer corpus tables, the per-round lineage cuts of the
+#: iterative operators (connected components, PageRank, k-means) and
+#: the result table ``catalog._sorted`` stages before its global sort.
+#: All of them go through :func:`stage`, which resolves the mode per
+#: call: the DataFrame's session runtime conf under this key
+#: (``spark.conf.set``, ``--conf``, or ``Context(settings=...)``, which
+#: writes it there) → the environment variable → the default.
+#: ``local`` (default): ``localCheckpoint`` — executor-local blocks,
+#: MEMORY_AND_DISK, fastest, but NOT fault-tolerant: the blocks have no
+#: lineage, so losing one executor mid-query fails the whole job.
+#: ``reliable``: an eager ``checkpoint()`` into the
+#: ``SparkContext.setCheckpointDir`` storage (HDFS/object store on a
+#: cluster) — survives executor loss at the cost of a write+read
+#: round-trip; the right setting for long-running 100 TB jobs where a
+#: lost executor must not waste hours of work.  Always eager: a lazy
+#: reliable checkpoint evaluates its input twice (the first consuming
+#: job, then the checkpoint write).  Reliable checkpoint files are
+#: removed only when the session was started with
+#: ``spark.cleaner.referenceTracking.cleanCheckpoints=true``; otherwise
+#: they stay in the checkpoint directory after the job.
 STAGING_MODE: Key[str] = Key(
     "spear_spark.staging-mode",
     str,
@@ -143,26 +153,29 @@ STAGING_MODE: Key[str] = Key(
 )
 
 
-def stage_for_reuse(df: Any, eager: bool = False, settings: "Settings | None" = None):
-    """Materialize a DataFrame for reuse per ``STAGING_MODE``
-    (resolved from ``settings`` or the environment/default layers).
+def stage(df: Any, eager: bool = False):
+    """Materialize ``df`` for reuse or lineage truncation per
+    ``STAGING_MODE``, read from ``df``'s own session conf (unset → the
+    environment/default layers).  ``local`` issues
+    ``localCheckpoint(eager=eager)``; ``reliable`` issues
+    ``checkpoint(eager=True)`` whatever ``eager`` says.
 
     In ``reliable`` mode the session must have a checkpoint directory
     configured (``SparkContext.setCheckpointDir``) — raising here with
     the key's name beats Spark's late, opaque failure inside the job.
     """
-    s = settings if settings is not None else Settings()
-    mode = s[STAGING_MODE]
-    if mode == "local":
+    spark = df.sparkSession
+    raw = spark.conf.get(STAGING_MODE.name, None)
+    settings = Settings() if raw is None else Settings({STAGING_MODE.name: raw})
+    if settings[STAGING_MODE] == "local":
         return df.localCheckpoint(eager=eager)
-    sc = df.sparkSession.sparkContext
-    if sc.getCheckpointDir() is None:
+    if spark.sparkContext.getCheckpointDir() is None:
         raise SettingsValidationError(
             f"settings key {STAGING_MODE.name} is 'reliable' but the "
             "SparkContext has no checkpoint directory — call "
             "spark.sparkContext.setCheckpointDir(<durable path>) first"
         )
-    return df.checkpoint(eager=eager)
+    return df.checkpoint(eager=True)
 
 
 #: The component Context boots from settings.  Reference analog:

@@ -65,7 +65,10 @@ class Context:
     passed, the :data:`spear_spark.config.SESSION_FACTORY` key names
     the factory callable (default :func:`get_spark`).  The reference
     selects its QueryCompiler class this way; here the compiler is
-    Catalyst, so the selectable component is the session factory."""
+    Catalyst, so the selectable component is the session factory.
+    The booted session's runtime conf then carries the settings'
+    :data:`spear_spark.config.STAGING_MODE`, where
+    :func:`spear_spark.config.stage` reads it."""
 
     def __init__(self, spark: SparkSession | None = None, settings: "Settings | None" = None):
         if spark is not None and settings is not None:
@@ -77,9 +80,14 @@ class Context:
                 "settings (which boot one via SESSION_FACTORY), not both"
             )
         if spark is None:
-            from spear_spark.config import Settings, resolve_session_factory
+            from spear_spark.config import STAGING_MODE, Settings, resolve_session_factory
 
             spark = resolve_session_factory(settings or Settings())()
+            if settings is not None:
+                # config.stage reads the mode from the session conf, so
+                # the setting reaches every staging site with no
+                # operator signature change
+                spark.conf.set(STAGING_MODE.name, settings[STAGING_MODE])
         self.spark = spark
 
     # -- entry points (Context.scala:18-40) --------------------------------

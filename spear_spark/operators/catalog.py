@@ -17,15 +17,16 @@ from pyspark.sql import functions as F
 
 def _sorted(df: SDF, *cols) -> SDF:
     """Determinism sort for catalog results, with the result table
-    materialized FIRST (lazy localCheckpoint): a global orderBy plans a
+    staged FIRST (config.stage): a global orderBy plans a
     RangePartitioning whose sampling pass otherwise re-runs the whole
     narrow tail of the query - broadcast-join verifies, pandas stages,
     decode pipelines - a second time (measured 2x on p134/p128 before
     the fix).  Catalog outputs are small report/pair tables, so the
     checkpoint is a few KB-MB of executor memory."""
-    return df.localCheckpoint(eager=False).orderBy(*cols)
+    return stage(df).orderBy(*cols)
 
 
+from spear_spark.config import stage
 from spear_spark.operators import dedup, multimodal, similarity, text
 from spear_spark.sources import load_table
 
@@ -632,7 +633,7 @@ def p18_clean_corpus(spark: SparkSession, sf_dir: str) -> SDF:
     # specializes each copy past ReuseExchange — without this the
     # quality regexes re-run per reference.  On a real cluster this is
     # the stage-out write between pipeline stages.
-    survivors = graded.join(keepers, "doc_id").localCheckpoint(eager=False)
+    survivors = stage(graded.join(keepers, "doc_id"))
     drops = dedup.near_dedup_lsh(survivors, "text", "doc_id", threshold=0.5).select(
         F.col("drop_id").alias("doc_id")
     )
@@ -3215,10 +3216,9 @@ def p82_rolling_sketch(spark: SparkSession, sf_dir: str) -> SDF:
         F.expr("unix_micros(ts) div 86400000000").alias("period"),
         F.lower(F.trim(F.col("event_type"))).alias("tok"),
     )
-    counts = (
+    counts = stage(
         ev.groupBy("period", "tok")
         .agg(F.count(F.lit(1)).alias("exact"))
-        .localCheckpoint(eager=False)
     )
     daily = sketch.cm_grid_from_counts(counts, ["period"])
     rolled = sketch.cm_rolling(daily, window=7)
@@ -5462,8 +5462,7 @@ def p128_audio_decode(spark: SparkSession, sf_dir: str) -> SDF:
     # range-partitioning SAMPLING pass would otherwise re-run the whole
     # synth+decode pipeline a second time (measured 12s -> ~7s at sf0.1)
     return (
-        multimodal.decode_wav(wavs, "doc_id", "payload")
-        .localCheckpoint(eager=False)
+        stage(multimodal.decode_wav(wavs, "doc_id", "payload"))
         .orderBy("doc_id")
     )
 
@@ -5691,8 +5690,7 @@ def p133_video_decode(spark: SparkSession, sf_dir: str) -> SDF:
     clips = multimodal.attach_y4m(docs, "text", "doc_id")
     # stats-before-sort: see p128 (sampling pass re-runs the decode)
     return (
-        multimodal.decode_y4m(clips, "doc_id", "payload")
-        .localCheckpoint(eager=False)
+        stage(multimodal.decode_y4m(clips, "doc_id", "payload"))
         .orderBy("doc_id")
     )
 
@@ -6734,8 +6732,7 @@ def p150_frame_cuts(spark: SparkSession, sf_dir: str) -> SDF:
     clips = multimodal.attach_y4m(docs, "text", "doc_id")
     # stats-before-sort: see p128 (sampling pass re-runs the decode)
     return (
-        multimodal.frame_cut_profile(clips, "doc_id", "payload", cut_threshold=5500)
-        .localCheckpoint(eager=False)
+        stage(multimodal.frame_cut_profile(clips, "doc_id", "payload", cut_threshold=5500))
         .orderBy("doc_id")
     )
 

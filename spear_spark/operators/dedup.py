@@ -31,6 +31,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from spear_spark.config import stage
 from spear_spark.functions import let_
 from spear_spark.operators.text import tokens
 
@@ -293,7 +294,7 @@ def _lsh_pairs_from_sig(
     # a 3.9s candidate pass at sf0.1, and at scale it halves the
     # corpus-proportional signature work.  The checkpointed table is
     # corpus x bands narrow rows.
-    stacked = stacked.localCheckpoint(eager=False)
+    stacked = stage(stacked)
     a = stacked.alias("a")
     b = stacked.alias("b")
     return (
@@ -383,7 +384,7 @@ def simhash_near_pairs(
     n_bands = max_hamming + 1
     band_bits = bits // n_bands
     mask = (1 << band_bits) - 1
-    sig = simhash(df, text_col, id_col, bits).localCheckpoint(eager=False)
+    sig = stage(simhash(df, text_col, id_col, bits))
     fps = sig.select("simhash").distinct()
     # one explode over the distinct fingerprints, not a union of
     # per-band selects — a union re-runs the upstream plan once per
@@ -548,7 +549,7 @@ def _shingle_pair_intersections(
         # The df-cap branch reads the shingle arrays twice (once for the
         # document-frequency tally, once for the posting explode); a lazy
         # local checkpoint pays the string-side shingling exactly once.
-        base = base.localCheckpoint(eager=False)
+        base = stage(base)
     # explode_OUTER + isnotnull, deliberately (r15): a plain explode of
     # the staged `shs` attribute triggers InferFiltersFromGenerate,
     # whose size(shs) > 0 filter gets alias-substituted down the pure
@@ -796,11 +797,11 @@ def connected_components(
                 f"connected_components requires integral ids; column {col!r} "
                 f"has type {id_types.get(col)!r} — hash or re-key to long first"
             )
-    e = (
+    e = stage(
         pairs.select(F.col(a).cast("long").alias("u"), F.col(b).cast("long").alias("v"))
         .filter(F.col("u") != F.col("v"))
-        .distinct()
-        .localCheckpoint()
+        .distinct(),
+        eager=True,
     )
     prev_sig = None
     converged = False
@@ -819,7 +820,7 @@ def connected_components(
         # distinct, so the small-star half skips its re-orientation +
         # re-distinct (see _small_star_directed for the measured,
         # expression-level-only effect).
-        e = _small_star_directed(_large_star(e)).localCheckpoint(eager=False)
+        e = stage(_small_star_directed(_large_star(e)))
         # order-independent edge-set signature; bit_xor never overflows
         # (SUM of hashes would trip ANSI long-overflow on big edge sets)
         sig = tuple(
@@ -1086,9 +1087,7 @@ def lsh_verified_pairs(
     never fires.  The staging is corpus-sized (MEMORY_AND_DISK — an
     over-memory corpus spills; on a real cluster this is the signature
     stage-out write every 100 TB dedup pipeline already does)."""
-    from spear_spark.config import stage_for_reuse
-
-    shs = stage_for_reuse(
+    shs = stage(
         _widen_narrow_scan(df).select(
             F.col(id_col).alias("_id"),
             shingles(text_col, shingle_n).alias("_shs"),
@@ -1457,9 +1456,7 @@ def bloom_decontaminate(
 
     The two compose: Bloom-filter first (map-side, kills ~everything),
     exact-verify the tiny surviving maybe-set when exactness matters."""
-    bloom = bloom_build(denylist, deny_col, n_bits, k, seed).localCheckpoint(
-        eager=False
-    )
+    bloom = stage(bloom_build(denylist, deny_col, n_bits, k, seed))
     return bloom_probe(df, col, bloom, n_bits, k, seed).filter(
         ~F.col("maybe_member")
     ).drop("maybe_member")
@@ -1567,12 +1564,11 @@ def repeated_ngram_profile(
     if n < 2:
         raise ValueError(f"repeated_ngram_profile: n must be >= 2, got {n}")
 
-    per_doc_hash = (
+    per_doc_hash = stage(
         ngram_positions(df, [F.col(id_col)], tokens(text_col), n)
         .select(F.col(id_col), h64(F.col("gram")).alias("hv"))
         .groupBy(id_col, "hv")
         .agg(F.count(F.lit(1)).alias("c"))
-        .localCheckpoint(eager=False)
     )
     # shuffle_hash: build side = vocabulary-sized totals (hash-sharded);
     # SortMergeJoin would re-sort the (doc, hash) stream for no benefit.
@@ -1618,12 +1614,11 @@ def ngram_novelty_profile(
     if n < 2:
         raise ValueError(f"ngram_novelty_profile: n must be >= 2, got {n}")
 
-    per_doc_hash = (
+    per_doc_hash = stage(
         ngram_positions(df, [F.col(id_col)], tokens(text_col), n)
         .select(F.col(id_col), h64(F.col("gram")).alias("hv"))
         .groupBy(id_col, "hv")
         .agg(F.count(F.lit(1)).alias("c"))
-        .localCheckpoint(eager=False)
     )
     firsts = per_doc_hash.groupBy("hv").agg(F.min(id_col).alias("_first"))
     return (
@@ -1670,12 +1665,11 @@ def max_dup_span(
         raise ValueError(f"max_dup_span: n must be >= 2, got {n}")
     from pyspark.sql.window import Window as W
 
-    pos = (
+    pos = stage(
         ngram_positions(df, [F.col(id_col)], tokens(text_col), n, pos_alias="pos0")
         .select(
             F.col(id_col), (F.col("pos0") + 1).alias("pos"), h64(F.col("gram")).alias("hv")
         )
-        .localCheckpoint(eager=False)
     )
     totals = pos.groupBy("hv").agg(F.count(F.lit(1)).alias("_total"))
     rep = (
@@ -1867,10 +1861,9 @@ def jaccard_prefix_pairs(
     from pyspark.sql.window import Window as W
 
     df = _widen_narrow_scan(df)
-    base = (
+    base = stage(
         df.select(F.col(id_col).alias("id"), shingles(text_col, shingle_n).alias("shs"))
         .filter(F.size("shs") > 0)
-        .localCheckpoint(eager=False)
     )
     post = base.select(
         F.col("id"), F.size("shs").alias("n"), F.explode("shs").alias("s")
@@ -2029,7 +2022,12 @@ def dedup_report(
             "min_chunk_tokens/max_chunk_df instead"
         )
     ids = F.col(id_col)
-    hashed = df.select(group_col, id_col, F.md5(F.col(text_col)).alias("_h"))
+    # assert_true yields NULL when the id is set, so the coalesce passes
+    # the id through; a NULL id raises (see the CONTRACT note below)
+    checked_id = F.coalesce(
+        F.assert_true(ids.isNotNull(), f"dedup_report: {id_col} must not be NULL"), ids
+    ).alias(id_col)
+    hashed = df.select(group_col, checked_id, F.md5(F.col(text_col)).alias("_h"))
     # ONE md5 pass for the exact stage: min(struct(id, group)) picks the
     # min-id row per hash AND carries its group (ids are the struct's
     # leading field, so lexicographic struct-min == min(id); group rides
@@ -2041,15 +2039,12 @@ def dedup_report(
     # shrinking survivor counts (the old min(id) ignored NULLs).  The
     # rest of dedup_report already assumes non-null ids (the retention
     # join keys on them); this aggregate makes the assumption
-    # load-bearing.  The
+    # load-bearing, so the projection feeding it enforces it.  The
     # result feeds TWO consumers (the survivor semi-join into pair
-    # generation, and the label join below), so it is materialized once
-    # behind a lazy localCheckpoint (narrow (group, id) rows —
-    # MEMORY_AND_DISK, spills instead of OOMing); without it each
-    # consumer would re-run the full corpus md5 aggregate.
-    from spear_spark.config import stage_for_reuse
-
-    exact_kept = stage_for_reuse(
+    # generation, and the label join below), so it is staged once
+    # (narrow (group, id) rows); without it each consumer would re-run
+    # the full corpus md5 aggregate.
+    exact_kept = stage(
         hashed.groupBy("_h")
         .agg(F.min(F.struct(F.col(id_col), F.col(group_col))).alias("_m"))
         .select(
@@ -2191,12 +2186,11 @@ def chunk_shared_pairs(
     per-pair tally.  Never doc-×-doc."""
     from spear_spark.operators.text import cdc_chunks
 
-    chunks = (
+    chunks = stage(
         cdc_chunks(df, text_col, id_col, modulus=modulus)
         .filter(F.col("n_tokens") >= int(min_tokens))
         .select(F.col(id_col), "chunk_hash")
         .distinct()
-        .localCheckpoint(eager=False)
     )
     if max_chunk_df is not None:
         ok = (
@@ -2250,13 +2244,12 @@ def source_chunk_overlap(
     chunks = cdc_chunks(df, text_col, id_col, modulus=modulus).filter(
         F.col("n_tokens") >= int(min_tokens)
     )
-    sc_pairs = (
+    sc_pairs = stage(
         chunks.join(
             df.select(F.col(id_col), F.col(source_col).alias("_src")), id_col
         )
         .select("_src", "chunk_hash")
         .distinct()
-        .localCheckpoint(eager=False)
     )
     totals = sc_pairs.groupBy("_src").agg(F.count(F.lit(1)).alias("_n"))
     a = sc_pairs.select(
@@ -2434,10 +2427,9 @@ def chunk_dedup_report(
     aggregate.  Nothing all-pairs, nothing collected."""
     from spear_spark.operators.text import cdc_chunks
 
-    chunks = (
+    chunks = stage(
         cdc_chunks(df, text_col, id_col, modulus=modulus)
         .select(id_col, "n_tokens", "chunk_hash")
-        .localCheckpoint(eager=False)
     )
     owner = chunks.groupBy("chunk_hash").agg(F.min(id_col).alias("_first_id"))
     dup = F.col("_first_id") < F.col(id_col)
@@ -2592,12 +2584,14 @@ def source_token_yield(
     on the content hash, a semi-join-shaped flag via the joined keep
     table, one bounded per-source aggregate.  All counts exact
     integers; the one ratio is a single rounded division."""
-    base = df.select(
-        F.col(id_col),
-        F.col(source_col).alias("_src"),
-        F.md5(F.lower(F.trim(F.col(text_col)))).alias("_h"),
-        F.size(tokens(F.col(text_col))).alias("_nt"),
-    ).localCheckpoint(eager=False)
+    base = stage(
+        df.select(
+            F.col(id_col),
+            F.col(source_col).alias("_src"),
+            F.md5(F.lower(F.trim(F.col(text_col)))).alias("_h"),
+            F.size(tokens(F.col(text_col))).alias("_nt"),
+        )
+    )
     keeps = base.groupBy("_h").agg(F.min(id_col).alias("_keep_id"))
     flagged = base.join(keeps, "_h").select(
         "_src",
@@ -2887,10 +2881,12 @@ def dedup_method_report(
     shared."""
     from spear_spark.operators.text import tokens as _tokens
 
-    nt = df.select(
-        F.col(id_col).alias("_id"),
-        F.size(_tokens(text_col)).cast("long").alias("_nt"),
-    ).localCheckpoint(eager=False)
+    nt = stage(
+        df.select(
+            F.col(id_col).alias("_id"),
+            F.size(_tokens(text_col)).cast("long").alias("_nt"),
+        )
+    )
     tot = nt.agg(
         F.count(F.lit(1)).alias("n_docs"), F.sum("_nt").alias("n_tokens")
     )
@@ -2990,15 +2986,13 @@ def lsh_calibration(
     ``shingle_n`` — callers passing a non-default ``shingle_n``
     before r14 got a k-gram estimate graded against 3-gram exact
     Jaccard, so their estimates shift after the fix."""
-    from spear_spark.config import stage_for_reuse
-
-    shs = stage_for_reuse(
+    shs = stage(
         _widen_narrow_scan(df).select(
             F.col(id_col).alias("_id"),
             shingles(text_col, shingle_n).alias("_shs"),
         )
     )
-    sig = stage_for_reuse(_minhash_sig_from_arrays(shs, "_id", k))
+    sig = stage(_minhash_sig_from_arrays(shs, "_id", k))
     cands = _lsh_pairs_from_sig(sig, "_id", k, bands).select("doc_a", "doc_b")
     siga = sig.select(
         F.col("_id").alias("doc_a"), *[F.col(f"mh{i}").alias(f"_a{i}") for i in range(k)]

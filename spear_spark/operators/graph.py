@@ -30,6 +30,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from spear_spark.config import stage
+
 
 def _iterate(
     e: DataFrame,
@@ -61,11 +63,10 @@ def _iterate(
     ``check_every > 1`` amortizes the driver synchronization over a
     lazily-chained depth-k DAG — the gap residual bounds cumulative
     movement, so the stop rule stays sound, just coarser."""
-    nodes = (
+    nodes = stage(
         e.select(F.col("src").alias("node"))
         .unionByName(e.select(F.col("dst").alias("node")))
         .distinct()
-        .localCheckpoint(eager=False)
     )
     n = nodes.count()
     if n == 0:
@@ -82,9 +83,7 @@ def _iterate(
     # — same size class as the rank vector; checkpoint it so the
     # aggregate over the full edge list doesn't re-execute every round
     mass_agg = F.sum("w") if mul_w else F.count(F.lit(1))
-    out_m = (
-        e.groupBy("src").agg(mass_agg.alias("m")).localCheckpoint(eager=False)
-    )
+    out_m = stage(e.groupBy("src").agg(mass_agg.alias("m")))
     if bcast:
         # broadcast regime: fold rank/mass into the broadcast vector
         # itself, so the probe side is the RAW checkpointed edge list —
@@ -95,7 +94,7 @@ def _iterate(
     else:
         # one src partitioning for the per-iteration shuffle join,
         # reused every round — only the rank side moves
-        ej = e.join(out_m, "src").repartition("src").localCheckpoint(eager=False)
+        ej = stage(e.join(out_m, "src").repartition("src"))
 
     # F.round (HALF_UP) matches SQL ROUND on positive values; Python's
     # round() is banker's and would diverge on exact half boundaries
@@ -160,14 +159,14 @@ def _iterate(
                 # rounds the pipelined depth-k DAG is cheaper than k
                 # serial checkpoint materializations, and it leaves no
                 # cached blocks behind in long-lived sessions
-                ranks = ranks.localCheckpoint(eager=False)
+                ranks = stage(ranks)
             continue
         if iters_run % check_every and iters_run != iters:
             continue  # lazily chain until the next residual check
         # the residual action doubles as the checkpoint materialization
         # (one job per CHECK, not per iteration); renamed columns keep
         # the shared-lineage self-join unambiguous
-        ranks = ranks.localCheckpoint(eager=False)
+        ranks = stage(ranks)
         pc = prev_checked.select(
             F.col("node").alias("_pn"), F.col("rank").alias("_pr")
         )
@@ -205,7 +204,7 @@ def _prep_unweighted_edges(
     e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
     if not edges_distinct:
         e = e.distinct()
-    return e.localCheckpoint(eager=False)
+    return stage(e)
 
 
 def pagerank(
@@ -364,7 +363,7 @@ def pagerank_weighted(
     if edges_aggregated:
         # checkpoint FIRST, validate on the checkpointed relation —
         # the bounded validation job doubles as the materialization
-        e = e.localCheckpoint(eager=False)
+        e = stage(e)
         bad_w = F.isnan("w") | F.col("w").isNull() | (F.col("w") <= 0)
         if e.filter(bad_w).limit(1).count() > 0:
             raise ValueError(msg)
@@ -373,14 +372,13 @@ def pagerank_weighted(
         #   _nulls — raw NULLs F.sum would silently drop,
         #   _minw  — raw negatives a larger positive sibling could
         #            sum away (raw NaN poisons the SUM itself).
-        e = (
+        e = stage(
             e.groupBy("src", "dst")
             .agg(
                 F.sum("w").alias("w"),
                 (F.count(F.lit(1)) - F.count("w")).alias("_nulls"),
                 F.min("w").alias("_minw"),
             )
-            .localCheckpoint(eager=False)
         )
         bad_w = (
             (F.col("_nulls") > 0)

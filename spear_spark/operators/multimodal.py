@@ -37,6 +37,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from spear_spark.config import stage
+
 DECODED_SCHEMA = StructType(
     [
         StructField("doc_id", LongType()),
@@ -360,10 +362,9 @@ def ahash_near_pairs(
     mask = (1 << width) - 1
     # the hash table is referenced 4x below and typically sits on an
     # expensive decode (mapInPandas) — materialize once
-    h = (
+    h = stage(
         df.select(F.col(id_col).alias("id"), F.col(hash_col).alias("h"))
         .filter(F.col("h").isNotNull())
-        .localCheckpoint(eager=False)
     )
     fps = h.select("h").distinct()
     band_structs = [

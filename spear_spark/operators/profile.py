@@ -37,6 +37,7 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from spear_spark.config import stage
 from spear_spark.operators.dedup import h64, ngram_positions
 from spear_spark.operators.sketch import (
     CM_DEPTH,
@@ -95,16 +96,17 @@ def corpus_health_report(
     a boilerplate gram would make the hottest hash partition one
     task), and the final assembly joins |groups|-row aggregates
     broadcast-side."""
-    arrs = df.select(
-        F.col(group_col),
-        F.col(doc_id_col).alias("_doc"),
-        tokens(text_col).alias("_t"),
-    ).localCheckpoint(eager=False)
-    counts = (
+    arrs = stage(
+        df.select(
+            F.col(group_col),
+            F.col(doc_id_col).alias("_doc"),
+            tokens(text_col).alias("_t"),
+        )
+    )
+    counts = stage(
         arrs.select(F.col(group_col), F.explode("_t").alias("tok"))
         .groupBy(group_col, "tok")
         .agg(F.count(F.lit(1)).alias("exact"))
-        .localCheckpoint(eager=False)
     )
 
     q_aggs = [
@@ -153,12 +155,11 @@ def corpus_health_report(
     # Repeated-gram share: (group, hash) exact counts off the staged
     # token arrays; the corpus total per hash is a second two-phase SUM
     # joined back shuffle_hash (build side = vocabulary-sized totals).
-    gh = (
+    gh = stage(
         ngram_positions(arrs, [F.col(group_col)], F.col("_t"), ngram_n)
         .select(F.col(group_col), h64(F.col("gram")).alias("hv"))
         .groupBy(group_col, "hv")
         .agg(F.count(F.lit(1)).alias("c"))
-        .localCheckpoint(eager=False)
     )
     gtot = gh.groupBy("hv").agg(F.sum("c").alias("_total"))
     dup = (

@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from spear_spark.config import stage
 from spear_spark.operators.text import tokens
 
 
@@ -196,10 +197,8 @@ def bigram_lm_score(df, text_col: str, id_col: str, k: float = 0.5, decimals: in
     the same floor as tf-idf — and V rides in as a broadcast 1-row
     literal.  Unordered double sum rounds at the end (epsilon
     convention)."""
-    staged = df.select(
-        F.col(id_col), tokens(F.col(text_col)).alias("_toks")
-    ).localCheckpoint(eager=False)
-    bg = (
+    staged = stage(df.select(F.col(id_col), tokens(F.col(text_col)).alias("_toks")))
+    bg = stage(
         staged.filter(F.size("_toks") >= 2)
         .select(
             F.col(id_col),
@@ -211,14 +210,12 @@ def bigram_lm_score(df, text_col: str, id_col: str, k: float = 0.5, decimals: in
             ).alias("b"),
         )
         .select(F.col(id_col), F.col("b.w1").alias("w1"), F.col("b.w2").alias("w2"))
-        .localCheckpoint(eager=False)
     )
     # (w1, w2, count) — vocab²-bounded, feeds both ctx_counts and the
     # scoring join; checkpoint so the bg aggregate runs once
-    big_counts = (
+    big_counts = stage(
         bg.groupBy("w1", "w2")
         .agg(F.count(F.lit(1)).alias("c12"))
-        .localCheckpoint(eager=False)
     )
     ctx_counts = big_counts.groupBy("w1").agg(F.sum("c12").alias("c1"))
     vocab = staged.select(F.explode("_toks").alias("w")).agg(
@@ -317,7 +314,7 @@ def sparse_cosine_pairs(
         # tf-idf pipeline once for both the tally and the probe side;
         # shuffle_hash keeps the posting stream unsorted (build side =
         # vocabulary-sized surviving-term set).
-        unit = unit.localCheckpoint(eager=False)
+        unit = stage(unit)
         ok = (
             unit.groupBy("term")
             .agg(F.count(F.lit(1)).alias("_df"))
@@ -387,11 +384,10 @@ def group_lexical_cosine(
     producing ≤ |groups|² rows per token, collapsed by a two-phase
     (group_a, group_b) SUM; norms broadcast onto the |pairs|-row
     matrix.  Nothing is ever doc-pairwise."""
-    counts = (
+    counts = stage(
         df.select(F.col(group_col), F.explode(tokens(text_col)).alias("tok"))
         .groupBy(group_col, "tok")
         .agg(F.count(F.lit(1)).alias("c"))
-        .localCheckpoint(eager=False)
     )
     norms = counts.groupBy(group_col).agg(
         F.sum(F.col("c") * F.col("c")).alias("n2")
@@ -466,11 +462,10 @@ def group_js_divergence(
     read by totals and the pair stage), ≤ |groups|² rows per token in
     the pair join collapsed by a two-phase SUM, totals broadcast.
     """
-    counts = (
+    counts = stage(
         df.select(F.col(group_col), F.explode(tokens(text_col)).alias("tok"))
         .groupBy(group_col, "tok")
         .agg(F.count(F.lit(1)).alias("c"))
-        .localCheckpoint(eager=False)
     )
     totals = counts.groupBy(group_col).agg(F.sum("c").alias("n"))
     a = counts.select(F.col(group_col).alias("ga"), "tok", F.col("c").alias("_ca"))
@@ -605,9 +600,7 @@ def dsir_features(df: DataFrame, text_col: str, id_col: str, n_buckets: int) -> 
     Emits ``(id, bucket)``, one row per feature INSTANCE."""
     from spear_spark.operators.dedup import h32
 
-    staged = df.select(
-        F.col(id_col), tokens(F.col(text_col)).alias("_toks")
-    ).localCheckpoint(eager=False)
+    staged = stage(df.select(F.col(id_col), tokens(F.col(text_col)).alias("_toks")))
     uni = staged.select(F.col(id_col), F.explode("_toks").alias("_f"))
     bi = staged.filter(F.size("_toks") >= 2).select(
         F.col(id_col),
@@ -661,9 +654,7 @@ def dsir_weights(
     the unordered double sum rounds at the end (epsilon convention).
     """
     tt = target_text_col or text_col
-    feats = dsir_features(df, text_col, id_col, n_buckets).localCheckpoint(
-        eager=False
-    )
+    feats = stage(dsir_features(df, text_col, id_col, n_buckets))
     doc_counts = feats.groupBy(id_col, "bucket").agg(
         F.count(F.lit(1)).alias("_c")
     )
@@ -671,10 +662,12 @@ def dsir_weights(
     raw_tot = feats.agg(F.count(F.lit(1)).alias("_rn"))
     # same two-consumer staging as feats: t_counts and t_tot would each
     # re-run the target's explode+hash otherwise
-    tfeats = dsir_features(
-        target.select(F.lit(0).alias("_tid"), F.col(tt).alias(tt)), tt, "_tid",
-        n_buckets,
-    ).localCheckpoint(eager=False)
+    tfeats = stage(
+        dsir_features(
+            target.select(F.lit(0).alias("_tid"), F.col(tt).alias(tt)), tt, "_tid",
+            n_buckets,
+        )
+    )
     t_counts = tfeats.groupBy("bucket").agg(F.count(F.lit(1)).alias("_tc"))
     t_tot = tfeats.agg(F.count(F.lit(1)).alias("_tn"))
     kk = F.lit(float(k))

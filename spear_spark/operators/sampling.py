@@ -23,6 +23,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from spear_spark.config import stage
 from spear_spark.functions import rand_like
 
 
@@ -540,11 +541,10 @@ def budget_waterfill(
     w_cum = Window.partitionBy().orderBy("tokens", "source").rowsBetween(
         Window.unboundedPreceding, Window.currentRow
     )
-    totals = (
+    totals = stage(
         df.groupBy(source_col)
         .agg(F.sum(F.col(weight_col)).cast("long").alias("tokens"))
         .withColumnRenamed(source_col, "source")
-        .localCheckpoint(eager=False)
     )
     # fail loudly on NULL (all-NULL weights — F.sum drops NULLs) or
     # negative per-source totals: the Σalloc == min(budget, ΣT) law

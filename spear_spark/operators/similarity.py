@@ -34,6 +34,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
+from spear_spark.config import stage
+
 
 def dot(a: Column, b: Column) -> Column:
     return F.aggregate(
@@ -653,9 +655,7 @@ def kmeans_lloyd(
     # same reason, guide §5), and locally it is the dominant per-round
     # cost.  Only the narrow (vec) projection is held — MEMORY_AND_DISK,
     # so an over-memory corpus spills rather than OOMs.
-    from spear_spark.config import stage_for_reuse
-
-    work = stage_for_reuse(df.select(F.col(vec_col)))
+    work = stage(df.select(F.col(vec_col)))
     converged = False
     iters_run = 0
     drift = None
@@ -934,9 +934,7 @@ def kcenter_coreset(
     # action): each of the k−1 farthest-point rounds otherwise re-runs
     # the scan + projection behind `df` — k corpus re-reads where one
     # suffices, the same round-loop caching as kmeans_lloyd.
-    from spear_spark.config import stage_for_reuse
-
-    work = stage_for_reuse(df.select(F.col(id_col), F.col(vec_col)))
+    work = stage(df.select(F.col(id_col), F.col(vec_col)))
     seed_rows = work.orderBy(F.col(id_col)).limit(1).collect()
     if not seed_rows:
         raise ValueError("kcenter_coreset: empty input")
@@ -1057,10 +1055,9 @@ def _gram_agg(
     parts = df.select(F.col(vec_col)).mapInPandas(
         gram_partials, "i int, j int, v long, n long"
     )
-    return (
+    return stage(
         parts.groupBy("i", "j")
         .agg(F.sum("v").alias("_v"), F.sum("n").alias("_n"))
-        .localCheckpoint(eager=False)
     )
 
 
@@ -1599,9 +1596,9 @@ def centroid_distance_matrix(
     plan-pinned to one parquet scan) — then the pair join is over
     ≤ |groups|·dim cells on the dim key: groups², but over CENTROIDS,
     never data."""
-    cells = centroid_cells(
-        df, vec_col, group_col, dim, scale, op="centroid_distance_matrix"
-    ).localCheckpoint(eager=False)
+    cells = stage(
+        centroid_cells(df, vec_col, group_col, dim, scale, op="centroid_distance_matrix")
+    )
     dec = "decimal(38,0)"
     a = cells.select(
         F.col("label").alias("label_a"),
@@ -1711,9 +1708,7 @@ def ivf_recall_curve(
         norm(F.col(vec_col)).alias("_cn"),
         F.col("_cell").cast("int").alias("_cell"),
     )
-    from spear_spark.config import stage_for_reuse
-
-    scored = stage_for_reuse(
+    scored = stage(
         assigned.crossJoin(F.broadcast(qs.withColumn("_qn", norm(F.col("_av")))))
         .filter(F.col("_cid") != F.col("_aid"))
         .select(

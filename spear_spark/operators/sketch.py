@@ -33,6 +33,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from spear_spark.config import stage
 from spear_spark.operators.dedup import h64
 from spear_spark.operators.text import tokens
 
@@ -104,11 +105,10 @@ def cm_heavy_hitters(
     The sketch-side explode then fans out depth × |vocab| rows, not
     depth × |occurrences|.
     """
-    exact = (
+    exact = stage(
         df.select(F.explode(tokens(text_col)).alias("tok"))
         .groupBy("tok")
         .agg(F.count(F.lit(1)).alias("exact"))
-        .localCheckpoint(eager=False)
     )
     cells = F.array(
         *[
@@ -385,11 +385,10 @@ def cm_heavy_hitters_by(
     Scale: grouped sketch state = |groups| · depth · width; the probe
     join is per-(group, row, bucket) on the bounded sketch; group
     totals are a |groups|-row broadcast."""
-    exact = (
+    exact = stage(
         df.select(F.col(group_col), F.explode(tokens(text_col)).alias("tok"))
         .groupBy(group_col, "tok")
         .agg(F.count(F.lit(1)).alias("exact"))
-        .localCheckpoint(eager=False)
     )
     cells = F.array(
         *[
@@ -665,7 +664,7 @@ def cm_inner_product_by(
     int64: at extreme per-group counts (> ~3·10⁹ occurrences landing
     in one cell pair) switch the product to decimal(38,0) on both
     engines before trusting the sum."""
-    s = sketch.localCheckpoint(eager=False)
+    s = stage(sketch)
     a = s.select(
         F.col(group_col).alias("ga"), "row", "bucket", F.col("cnt").alias("_ca")
     )
@@ -789,7 +788,7 @@ def hll_overlap_by(
     (pairs × m rows total).  For |groups| in the thousands the
     pair fan-out is still only ~10⁶·m tiny rows; the corpus itself
     is never touched again."""
-    regs = hll_register_table_by(df, group_col, key, m).localCheckpoint(eager=False)
+    regs = stage(hll_register_table_by(df, group_col, key, m))
     per = regs.groupBy(group_col).agg(
         F.coalesce(
             F.sum(F.expr(f"shiftleft(CAST(1 AS BIGINT), {_RHO_CAP} - max_rho)")),

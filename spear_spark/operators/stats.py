@@ -21,6 +21,8 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from spear_spark.config import stage
+
 
 def group_quantiles(
     df: DataFrame,
@@ -1428,7 +1430,7 @@ def volume_autocorr(
     # Spark `div` truncates toward zero, which would merge days -0
     # and +0 for pre-1970 timestamps while the DuckDB oracle's `//`
     # floors them apart.
-    days = (
+    days = stage(
         df.select(
             F.expr(
                 f"(unix_micros({ts_col})"
@@ -1438,7 +1440,6 @@ def volume_autocorr(
         )
         .groupBy("_p")
         .agg(F.count(F.lit(1)).alias("_n"))
-        .localCheckpoint(eager=False)
     )
     lags = F.explode(
         F.array(*[F.lit(i) for i in range(1, int(max_lag) + 1)])

@@ -15,6 +15,8 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from spear_spark.config import stage
+
 # Tiny per-language stopword lists for the n-gram/stopword-ratio
 # heuristic.  Deterministic and engine-portable (plain IN lists).
 STOPWORDS: dict[str, tuple[str, ...]] = {
@@ -578,9 +580,7 @@ def distinct_ngram_stats(df, text_col: str, group_col: str, max_n: int = 3):
 
     from spear_spark.operators.dedup import ngram_positions
 
-    staged = df.select(
-        F.col(group_col), tokens(F.col(text_col)).alias("_toks")
-    ).localCheckpoint(eager=False)
+    staged = stage(df.select(F.col(group_col), tokens(F.col(text_col)).alias("_toks")))
     levels = [
         ngram_positions(
             staged, [F.col(group_col), F.lit(n).alias("n")], F.col("_toks"), n
@@ -692,16 +692,13 @@ def bpe_learn(
         # the 1-row max are bounded by the group domain and ride back
         # as broadcasts — rows with a NULL group are dropped (no group
         # to equalize against), loudly documented here
-        gw = (
+        gw = stage(
             df.select(F.col(balance_by).alias("_g"), pre_tokens)
             .filter(F.col("_g").isNotNull())
             .groupBy("_g", "w")
             .agg(F.count(F.lit(1)).alias("_c"))
-            .localCheckpoint(eager=False)
         )
-        tot = gw.groupBy("_g").agg(F.sum("_c").alias("_t")).localCheckpoint(
-            eager=False
-        )
+        tot = stage(gw.groupBy("_g").agg(F.sum("_c").alias("_t")))
         tmax = tot.agg(F.max("_t").alias("_tmax"))
         mult = (
             tot.crossJoin(F.broadcast(tmax))

@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
 from spear_spark import functions as sf
+from spear_spark.config import stage
 from spear_spark.dataframe import DataFrame
 from spear_spark.sources import load_table, register_tables
 
@@ -2399,12 +2400,12 @@ def q64_important_stock(spark: SparkSession, sf_dir: str) -> SDF:
     li = _t(spark, sf_dir, "lineitem")
     supp = _t(spark, sf_dir, "supplier")
     nat = _t(spark, sf_dir, "nation").filter(F.col("n_name") == "NATION_3")
-    vals = (
+    vals = stage(
         li.join(supp, F.col("l_suppkey") == F.col("s_suppkey"))
         .join(nat, F.col("s_nationkey") == F.col("n_nationkey"))
         .groupBy("l_partkey")
         .agg(F.sum(D("l_extendedprice") * D("l_quantity")).alias("v"))
-        .df.localCheckpoint(eager=False)
+        .df
     )
     threshold = vals.agg(
         (

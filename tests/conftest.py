@@ -29,6 +29,27 @@ def ctx(spark):
     return Context(spark)
 
 
+@pytest.fixture
+def checkpoint_dir(spark, tmp_path):
+    """A checkpoint dir for reliable staging; the session's previous
+    one (possibly none) is restored afterwards."""
+    jsc = spark.sparkContext._jsc.sc()
+    previous = jsc.checkpointDir()
+    spark.sparkContext.setCheckpointDir(str(tmp_path / "ckpt"))
+    yield
+    getattr(jsc, "checkpointDir_$eq")(previous)
+
+
+@pytest.fixture
+def unset_mode(spark):
+    """Leaves the shared session with no staging-mode conf."""
+    from spear_spark.config import STAGING_MODE
+
+    spark.conf.unset(STAGING_MODE.name)
+    yield
+    spark.conf.unset(STAGING_MODE.name)
+
+
 SF_DIR = os.environ.get("SPEAR_TEST_SF_DIR", "/root/testdata/sf0.001")
 
 

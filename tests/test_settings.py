@@ -3,10 +3,13 @@
 ``with_value`` overrides, environment layering, and Context booting its
 session factory from the ``SESSION_FACTORY`` key."""
 
+from types import SimpleNamespace
+
 import pytest
 
 from spear_spark.config import (
     SESSION_FACTORY,
+    STAGING_MODE,
     Key,
     Settings,
     SettingsValidationError,
@@ -63,8 +66,15 @@ def test_none_default_means_optional_not_missing():
     assert Settings().with_value(opt, "5")[opt] == 5
 
 
+class _SentinelConf(dict):
+    set = dict.__setitem__
+
+
+_SENTINEL = SimpleNamespace(conf=_SentinelConf())
+
+
 def _sentinel_factory():
-    return "SENTINEL-SESSION"
+    return _SENTINEL
 
 
 def test_context_boots_session_factory_from_settings(spark):
@@ -76,7 +86,12 @@ def test_context_boots_session_factory_from_settings(spark):
 
     assert Settings()[SESSION_FACTORY] == "spear_spark.context.get_spark"
     s = Settings().with_value(SESSION_FACTORY, f"{__name__}._sentinel_factory")
-    assert Context(settings=s).spark == "SENTINEL-SESSION"
+    assert Context(settings=s).spark is _SENTINEL
+    # the booted session carries the resolved staging mode, which is
+    # where config.stage reads it
+    assert _SENTINEL.conf == {STAGING_MODE.name: "local"}
+    with pytest.raises(SettingsValidationError, match="staging-mode"):
+        Context(settings=s.with_value(STAGING_MODE, "both"))
     # an explicit session wins — no factory boot
     assert Context(spark=spark).spark is spark
     # both at once is a contract error: the settings' factory would be
@@ -96,8 +111,6 @@ def test_unimportable_factory_raises_descriptively():
 
 
 def test_staging_mode_validator():
-    from spear_spark.config import STAGING_MODE
-
     s = Settings()
     assert s[STAGING_MODE] == "local"
     assert s.with_value(STAGING_MODE, "reliable")[STAGING_MODE] == "reliable"
@@ -105,36 +118,47 @@ def test_staging_mode_validator():
         s.with_value(STAGING_MODE, "both")[STAGING_MODE]
 
 
-def test_stage_for_reuse_local_default(spark):
-    from spear_spark.config import stage_for_reuse
+def test_stage_local_default(spark, unset_mode):
+    from spear_spark.config import stage
 
     df = spark.range(100).selectExpr("id", "id * 2 AS v")
-    staged = stage_for_reuse(df)
+    staged = stage(df)
     # localCheckpoint truncates lineage to an RDD scan
     assert staged.count() == 100
     assert "LogicalRDD" in staged._jdf.queryExecution().optimizedPlan().toString()
 
 
-def test_stage_for_reuse_reliable_requires_checkpoint_dir(spark, tmp_path):
-    from spear_spark.config import STAGING_MODE, stage_for_reuse
+def test_stage_reliable_requires_checkpoint_dir(spark, unset_mode, checkpoint_dir, monkeypatch):
+    from pyspark import SparkContext
+
+    from spear_spark.config import STAGING_MODE, stage
 
     df = spark.range(10)
-    reliable = Settings().with_value(STAGING_MODE, "reliable")
-    if spark.sparkContext.getCheckpointDir() is None:
+    spark.conf.set(STAGING_MODE.name, "reliable")
+    # the fixture (or an earlier test) set a dir; hide it so the raise
+    # path runs every time
+    with monkeypatch.context() as m:
+        m.setattr(SparkContext, "getCheckpointDir", lambda self: None)
         with pytest.raises(SettingsValidationError, match="checkpoint directory"):
-            stage_for_reuse(df, settings=reliable)
-    spark.sparkContext.setCheckpointDir(str(tmp_path / "ckpt"))
-    staged = stage_for_reuse(df, eager=True, settings=reliable)
+            stage(df)
+    staged = stage(df)
     assert staged.count() == 10
     # reliable checkpoint also reads back as an RDD scan, but its
     # blocks live in the checkpoint dir (survives executor loss)
     assert "LogicalRDD" in staged._jdf.queryExecution().optimizedPlan().toString()
 
 
-def test_stage_for_reuse_env_layer(spark, monkeypatch):
-    from spear_spark.config import STAGING_MODE, stage_for_reuse
+def test_stage_mode_layers(spark, unset_mode, monkeypatch):
+    from spear_spark.config import STAGING_MODE, stage
 
-    monkeypatch.setenv(STAGING_MODE.env_name, "nonsense")
     df = spark.range(5)
+    monkeypatch.setenv(STAGING_MODE.env_name, "nonsense")
     with pytest.raises(SettingsValidationError, match="staging-mode"):
-        stage_for_reuse(df)
+        stage(df)
+    # the session conf wins over the environment...
+    spark.conf.set(STAGING_MODE.name, "local")
+    assert stage(df).count() == 5
+    # ...and is checked by the same validator
+    spark.conf.set(STAGING_MODE.name, "both")
+    with pytest.raises(SettingsValidationError, match="staging-mode"):
+        stage(df)
