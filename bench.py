@@ -1,7 +1,15 @@
 """Benchmark harness: runs the headline queries at $SPARK_GRAFT_SF_DIR
 (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints
 ONE JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
-"queries": {name: sec}, "sf": ...}.
+"queries": {name: sec}, "sf": ...}.  "sf" is N for a dir named sf<N>
+and null otherwise (e.g. a scripts/make_scaled_dir.py output).
+
+    python bench.py                      # the HEADLINE sweep
+    python bench.py p05_ngram_jaccard    # just the named queries
+
+The session setup, the timed loop and the persisted-RDD drop are also
+the harness of scripts/scaling_run.py, profile_query.py and
+capture_plans.py.
 
 Each query is executed three times and the MEDIAN is reported — the
 JVM-warmup first run and transient machine load both fall out, so
@@ -22,13 +30,21 @@ from __future__ import annotations
 
 import json
 import os
+import re
+import statistics
 import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from pyspark.sql import SparkSession  # noqa: E402
+
+import __spark_entry__ as entry_mod  # noqa: E402
+from spear_spark.context import get_spark  # noqa: E402
+
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+REPS = 3
 
 HEADLINE = [
     "q01_pricing_summary",
@@ -226,50 +242,68 @@ HEADLINE = [
 ]
 
 
-def main() -> None:
-    from spear_spark.context import get_spark
-
+def start_session(app_name: str) -> SparkSession:
+    """The tuned local[$SPARK_GRAFT_CPUS] session every timing uses,
+    warmed (JVM + file-system cache) with one trivial action."""
     spark = get_spark(
-        app_name="spear_spark_bench",
+        app_name=app_name,
         master=f"local[{CPUS}]",
         extra_conf={"spark.ui.enabled": "false", "spark.driver.memory": "16g"},
     )
     spark.sparkContext.setLogLevel("ERROR")
-
-    import __spark_entry__ as entry_mod
-
-    qs = entry_mod.queries()
-
-    # warm the JVM + file-system cache once with a trivial action
     spark.range(1000).count()
+    return spark
 
-    import statistics
 
-    def drop_persisted_rdds() -> None:
-        # checkpoint/cache blocks (localCheckpoint in the iterative
-        # operators) otherwise accumulate across 80+ queries x 3 runs
-        # and the late queries pay the eviction/GC pressure of the
-        # early ones' leftovers — measured ~10% drift on the last
-        # bench entries.  Each query starts from a clean block store.
-        # blocking=True: async removal would overlap the next timed
-        # run, reintroducing the cross-query drift this exists to stop
-        sc = spark.sparkContext._jsc.sc()
-        it = sc.getPersistentRDDs().valuesIterator()
-        while it.hasNext():
-            it.next().unpersist(True)
+def drop_persisted_rdds(spark: SparkSession) -> None:
+    """Unpersist every persisted RDD, blocking.
 
+    Checkpoint/cache blocks (the staged intermediates of the iterative
+    operators) otherwise accumulate across 179 queries x 3 runs, and the
+    late queries pay the eviction/GC pressure of the early ones'
+    leftovers — measured ~10% drift on the last bench entries.  Each
+    query starts from a clean block store.  Blocking: async removal
+    would overlap the next timed run, reintroducing that drift."""
+    it = spark.sparkContext._jsc.sc().getPersistentRDDs().valuesIterator()
+    while it.hasNext():
+        it.next().unpersist(True)
+
+
+def median_times(
+    spark: SparkSession, names: list[str], sf_dir: str
+) -> dict[str, float]:
+    """{name: median wall seconds of REPS noop-sink runs} for catalog
+    queries on sf_dir, dropping persisted RDDs after every run.  The
+    session is left running: the caller owns it."""
+    qs = entry_mod.queries()
     timings: dict[str, float] = {}
-    for name in HEADLINE:
+    for name in names:
         fn = qs[name]
         runs = []
-        for _ in range(3):
+        for _ in range(REPS):
             t0 = time.perf_counter()
-            fn(spark, SF_DIR).write.format("noop").mode("overwrite").save()
+            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
             runs.append(time.perf_counter() - t0)
-            drop_persisted_rdds()
+            drop_persisted_rdds(spark)
         timings[name] = round(statistics.median(runs), 3)
+    return timings
 
-    sf = SF_DIR.rstrip("/").rsplit("sf", 1)[-1]
+
+def scale_factor(sf_dir: str) -> float | None:
+    """N for a dir named sf<N> (sf0.1 -> 0.1), None for any other name."""
+    m = re.fullmatch(r"sf(\d+(?:\.\d+)?)", os.path.basename(sf_dir.rstrip("/")))
+    return float(m.group(1)) if m else None
+
+
+def main() -> None:
+    names = sys.argv[1:] or HEADLINE
+    unknown = sorted(set(names) - set(entry_mod.queries()))
+    if unknown:
+        raise SystemExit(f"unknown queries: {', '.join(unknown)}")
+    sf = scale_factor(SF_DIR)
+
+    spark = start_session("spear_spark_bench")
+    timings = median_times(spark, names, SF_DIR)
     print(
         json.dumps(
             {
@@ -277,7 +311,7 @@ def main() -> None:
                 "value": round(sum(timings.values()), 3),
                 "unit": "sec",
                 "queries": timings,
-                "sf": float(sf),
+                "sf": sf,
             }
         )
     )

@@ -10,30 +10,21 @@ from __future__ import annotations
 import os
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
-SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+import __spark_entry__ as entry_mod  # noqa: E402
+from bench import SF_DIR, start_session  # noqa: E402
 
 
 def main() -> None:
-    from spear_spark.context import get_spark
-
     tag, suffix, *names = sys.argv[1:]
     if not names:
         raise SystemExit("usage: capture_plans.py <tag> <suffix> <query> [...]")
-    outdir = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", tag)
+    outdir = os.path.join(ROOT, "plans", tag)
     os.makedirs(outdir, exist_ok=True)
 
-    spark = get_spark(
-        app_name="spear_spark_plans",
-        master=f"local[{CPUS}]",
-        extra_conf={"spark.ui.enabled": "false", "spark.driver.memory": "16g"},
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-
-    import __spark_entry__ as entry_mod
-
+    spark = start_session("spear_spark_plans")
     qs = entry_mod.queries()
     for name in names:
         df = qs[name](spark, SF_DIR)

@@ -8,9 +8,9 @@ documents/embeddings are replicated with the tests/scaleup_harness.py
 isomorphisms (per-replica alphabet rotation for text — preserves each
 replica's internal dup/near-dup structure exactly while decorrelating
 replicas; signed cyclic rotation for vectors — orthogonal, same
-property), EXTENDED to carry the full table schema (lang/source/
-n_chars ride along per replica — a char bijection on [a-z] preserves
-length; label rides along per vector).  All other tables are copied
+property), with the rest of each table's schema re-attached from the
+base row (lang/source/n_chars per document — a char bijection on [a-z]
+preserves length; label per vector).  All other tables are copied
 byte-for-byte.  Deterministic: no randomness anywhere.
 
 Usage: python scripts/make_scaled_dir.py <out_dir> [reps=10] [src=/root/testdata/sf0.1]
@@ -23,80 +23,33 @@ import shutil
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-sys.path.insert(
-    0, os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tests")
+
+from bench import start_session  # noqa: E402
+from tests.scaleup_harness import (  # noqa: E402
+    attach_base_column,
+    replicate_docs,
+    replicate_embeddings,
 )
 
 
 def main() -> None:
-    from pyspark.sql import functions as F
-
-    from scaleup_harness import ALPHA, EMB_DIM, ID_SHIFT
-    from spear_spark.context import get_spark
-
     out_dir = sys.argv[1]
     reps = int(sys.argv[2]) if len(sys.argv) > 2 else 10
     src = sys.argv[3] if len(sys.argv) > 3 else "/root/testdata/sf0.1"
 
     os.makedirs(out_dir, exist_ok=True)
-    spark = get_spark(
-        app_name="make_scaled_dir",
-        master="local[32]",
-        extra_conf={"spark.ui.enabled": "false", "spark.driver.memory": "16g"},
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = start_session("make_scaled_dir")
 
     docs = spark.read.parquet(f"{src}/documents.parquet")
-    copies = F.array(
-        *[
-            F.struct(
-                F.lit(i).alias("rep"),
-                F.translate(F.col("text"), ALPHA, ALPHA[i:] + ALPHA[:i]).alias("t"),
-            )
-            for i in range(reps)
-        ]
-    )
     (
-        docs.withColumn("_c", F.explode(copies))
-        .select(
-            (F.col("doc_id") + F.col("_c.rep") * F.lit(ID_SHIFT)).alias("doc_id"),
-            F.col("_c.t").alias("text"),
-            "lang",
-            "source",
-            "n_chars",
-        )
+        attach_base_column(replicate_docs(docs, reps), docs, "lang", "source", "n_chars")
         .repartition(32)
         .write.mode("overwrite")
         .parquet(f"{out_dir}/documents.parquet")
     )
-
     emb = spark.read.parquet(f"{src}/embeddings.parquet")
-
-    def xform(r: int):
-        if r == 0:
-            return F.col("embedding")
-        shifted = F.concat(
-            F.slice(F.col("embedding"), r + 1, EMB_DIM - r),
-            F.slice(F.col("embedding"), 1, r),
-        )
-        signs = F.array(
-            *[
-                F.lit(-1.0 if (i * 7 + r) % 3 == 0 else 1.0).cast("float")
-                for i in range(EMB_DIM)
-            ]
-        )
-        return F.zip_with(shifted, signs, lambda x, s: (x * s).cast("float"))
-
-    ecopies = F.array(
-        *[F.struct(F.lit(r).alias("rep"), xform(r).alias("v")) for r in range(reps)]
-    )
     (
-        emb.withColumn("_c", F.explode(ecopies))
-        .select(
-            (F.col("vec_id") + F.col("_c.rep") * F.lit(ID_SHIFT)).alias("vec_id"),
-            F.col("_c.v").alias("embedding"),
-            "label",
-        )
+        attach_base_column(replicate_embeddings(emb, reps), emb, "label", id_col="vec_id")
         .repartition(32)
         .write.mode("overwrite")
         .parquet(f"{out_dir}/embeddings.parquet")

@@ -5,11 +5,12 @@ catalog so below-fold regressions can't hide behind stale evidence
 rows.
 
 Usage: python scripts/preflight.py [--window-only] [sf_dir]
-Exit code 0 iff everything matches.  Round-5 baseline: 152/152 green;
-round-6: 159/159 (158 oracle-paired + p72 rows-only); round-7:
-163/163 all oracle-paired; round-8: 171/171 all oracle-paired;
-round-9: 182/182 all oracle-paired (189/189 after p100-p106 landed);
-round-10: 200/200; round-11: 210/210 all oracle-paired.
+Exit code 0 iff everything matches.  The contract is the whole catalog
+green: 247/247, every query oracle-paired.
+
+The session is deliberately vanilla (no DEFAULT_CONF, unlike bench.py's
+tuned one): it mirrors the gate's own session, so a setting a query needs
+for correctness has to be set at call time.
 """
 
 from __future__ import annotations
@@ -18,14 +19,14 @@ import os
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-sys.path.insert(
-    0, os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tests")
-)
+
+from pyspark.sql import SparkSession  # noqa: E402
+
+import __spark_entry__ as entry_mod  # noqa: E402
+from tests.oracle_harness import compare, duck_connection  # noqa: E402
 
 
 def main() -> int:
-    from pyspark.sql import SparkSession
-
     args = [a for a in sys.argv[1:] if not a.startswith("--")]
     window_only = "--window-only" in sys.argv
     sf_dir = args[0] if args else "/root/testdata/sf0.01"
@@ -36,9 +37,6 @@ def main() -> int:
         .getOrCreate()
     )  # vanilla, like the driver — no DEFAULT_CONF
     spark.sparkContext.setLogLevel("ERROR")
-
-    import __spark_entry__ as entry_mod
-    from oracle_harness import compare, duck_connection
 
     qs, osql = entry_mod.queries(), entry_mod.oracle_sql()
     con = duck_connection(sf_dir)

@@ -1,7 +1,8 @@
 """Per-query profile: split wall time into plan construction (driver,
 lazy fn call) vs execution (noop sink), and count Spark jobs per run —
 the job count is the per-round/materialization census that tells you
-whether an iterative operator is paying extra passes.  Usage:
+whether an iterative operator is paying extra passes.  Runs on any
+$SPARK_GRAFT_SF_DIR, scaled dirs included.  Usage:
 
     python scripts/profile_query.py p102_dedup_report p59_pagerank
 """
@@ -16,36 +17,17 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
-REPS = int(os.environ.get("PROFILE_REPS", "3"))
+import __spark_entry__ as entry_mod  # noqa: E402
+from bench import REPS, SF_DIR, drop_persisted_rdds, start_session  # noqa: E402
 
 
 def main() -> None:
-    from spear_spark.context import get_spark
-
     names = sys.argv[1:]
     if not names:
         raise SystemExit("usage: profile_query.py <query-name> [...]")
 
-    spark = get_spark(
-        app_name="spear_spark_profile",
-        master=f"local[{CPUS}]",
-        extra_conf={"spark.ui.enabled": "false", "spark.driver.memory": "16g"},
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-
-    import __spark_entry__ as entry_mod
-
+    spark = start_session("spear_spark_profile")
     qs = entry_mod.queries()
-    spark.range(1000).count()
-
-    def drop_persisted_rdds() -> None:
-        sc = spark.sparkContext._jsc.sc()
-        it = sc.getPersistentRDDs().valuesIterator()
-        while it.hasNext():
-            it.next().unpersist(True)
-
     tracker = spark.sparkContext.statusTracker()
     out = {}
     for name in names:
@@ -62,7 +44,7 @@ def main() -> None:
             plan_ts.append(round(t1 - t0, 3))
             exec_ts.append(round(t2 - t1, 3))
             jobs.append(j1 - j0)
-            drop_persisted_rdds()
+            drop_persisted_rdds(spark)
         out[name] = {
             "plan_s": statistics.median(plan_ts),
             "exec_s": statistics.median(exec_ts),

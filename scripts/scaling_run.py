@@ -1,7 +1,7 @@
 """Round-15 parallelism-evidence run (VERDICT r14 item 4): time the
 heavy dedup/similarity/text queries on the scaled corpus
-(scripts/make_scaled_dir.py) at a given core count, with the exact
-bench.py methodology (3 runs, median, noop sink, persisted-RDD drop
+(scripts/make_scaled_dir.py) at a given core count, with bench.py's
+session and timed loop (3 runs, median, noop sink, persisted-RDD drop
 between runs).  Run once per core count and combine:
 
     python scripts/make_scaled_dir.py /tmp/spear_scaled_10x 10
@@ -21,14 +21,13 @@ from __future__ import annotations
 
 import json
 import os
-import statistics
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from bench import CPUS, median_times, start_session  # noqa: E402
+
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/tmp/spear_scaled_10x")
-CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
 QUERIES = [
     # document family
@@ -55,36 +54,10 @@ QUERIES = [
 
 
 def main() -> None:
-    from spear_spark.context import get_spark
-
-    spark = get_spark(
-        app_name="spear_spark_scaling",
-        master=f"local[{CPUS}]",
-        extra_conf={"spark.ui.enabled": "false", "spark.driver.memory": "16g"},
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-
-    import __spark_entry__ as entry_mod
-
-    qs = entry_mod.queries()
-    spark.range(1000).count()
-
-    def drop_persisted_rdds() -> None:
-        sc = spark.sparkContext._jsc.sc()
-        it = sc.getPersistentRDDs().valuesIterator()
-        while it.hasNext():
-            it.next().unpersist(True)
-
+    spark = start_session("spear_spark_scaling")
     timings: dict[str, float] = {}
     for name in QUERIES:
-        fn = qs[name]
-        runs = []
-        for _ in range(3):
-            t0 = time.perf_counter()
-            fn(spark, SF_DIR).write.format("noop").mode("overwrite").save()
-            runs.append(time.perf_counter() - t0)
-            drop_persisted_rdds()
-        timings[name] = round(statistics.median(runs), 3)
+        timings.update(median_times(spark, [name], SF_DIR))
         print(f"# {name}: {timings[name]}", file=sys.stderr, flush=True)
 
     print(

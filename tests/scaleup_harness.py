@@ -1,7 +1,9 @@
 """Shared corpus replicators for the 10x scale-up harness — ONE
-definition used by both the timing script (scripts/dedup_scaleup.py)
+definition used by both the scaled-dir builder (scripts/make_scaled_dir.py)
 and the ratio pins (tests/test_scaleup.py), so the measured corpus and
-the pinned corpus cannot silently drift apart.
+the pinned corpus cannot silently drift apart.  The retired timing
+script that recorded the docs/DESIGN.md scale-up walls is readable at
+``git show f732efd:scripts/dedup_scaleup.py``.
 
 Both replicators build reps ISOMORPHIC copies of the input with ids
 shifted into disjoint ranges (``ID_SHIFT`` apart):
@@ -80,13 +82,14 @@ def replicate_embeddings(emb, reps: int):
     )
 
 
-def attach_base_column(replicated, base, col: str, id_col: str = "doc_id"):
-    """Re-attach a base-table column (e.g. ``source``) to replicated
+def attach_base_column(replicated, base, *cols: str, id_col: str = "doc_id"):
+    """Re-attach base-table columns (e.g. ``source``) to replicated
     rows: every replica id is ``base_id + rep * ID_SHIFT``, so the base
     row is recovered with a pmod join.  Used by the report-family
     scale-up (p102/p137/p153), whose per-group accounting needs the
-    group column the replicators drop."""
-    key = base.select(F.col(id_col).alias("_bid"), F.col(col))
+    group column the replicators drop, and by scripts/make_scaled_dir.py
+    for the full table schema."""
+    key = base.select(F.col(id_col).alias("_bid"), *cols)
     return (
         replicated.join(
             key, F.pmod(F.col(id_col), F.lit(ID_SHIFT)) == F.col("_bid")
