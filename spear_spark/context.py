@@ -145,8 +145,9 @@ class Context:
 
     def read_parquet(self, path: str) -> "DataFrame":
         from spear_spark.dataframe import DataFrame
+        from spear_spark.sources import read_parquet
 
-        return DataFrame(self.spark.read.parquet(path))
+        return DataFrame(read_parquet(self.spark, path))
 
     def read_csv(self, path: str, **options: Any) -> "DataFrame":
         from spear_spark.dataframe import DataFrame

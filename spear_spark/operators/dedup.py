@@ -1901,7 +1901,8 @@ def jaccard_prefix_pairs(
     # (2.77 → 5.57 s median, 5 paired reps on a quiet box): the
     # per-shingle struct-list aggregation costs more than the second
     # pipeline evaluation, whose input is the checkpointed shingle
-    # arrays.  scripts/ab_p90_postings.py reproduces both variants.
+    # arrays.  `git show f732efd:scripts/ab_p90_postings.py` reproduces
+    # both variants.
     t = float(threshold)
     # PPJoin position filter: both docs rank their shingles in the SAME
     # global (df, s) order, so a pair meeting on the token at ranks

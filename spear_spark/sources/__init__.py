@@ -16,13 +16,28 @@ Scale notes (100 TB design point):
 * For repeated co-located joins (e.g. lineitem ⋈ orders on orderkey at
   every query), persist bucketed copies via :func:`write_bucketed` —
   bucket joins skip the shuffle entirely.
+* Every parquet read goes through :func:`read_parquet`, which infers a
+  path's schema once and reuses it while the path is unchanged, so a
+  warm ``load_table`` launches no Spark job (schema inference reads
+  the footer in a job — per table, per query).  "Unchanged" is a
+  fingerprint from a fixed number of Hadoop ``FileSystem`` calls
+  whatever the file count: the path's length and modification time,
+  and for a directory its content summary (total length, file count,
+  directory count).  A rewrite, a Spark overwrite or an append changes
+  it.  What it would miss: a part file inside a directory rewritten in
+  place with the same length, which leaves the directory's mtime and
+  content summary as they were.  Write new files instead (every Spark
+  writer does).
 """
 
 from __future__ import annotations
 
 import os
 
+from py4j.java_gateway import JavaClass
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 TABLES = (
     "region", "nation", "customer", "supplier", "part",
@@ -30,6 +45,61 @@ TABLES = (
 )
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+
+# session confs that change the schema Spark infers from parquet files
+SCHEMA_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.mergeSchema",
+    "spark.sql.sources.partitionColumnTypeInference.enabled",
+    "spark.sql.caseSensitive",
+)
+
+# (qualified path, SCHEMA_CONFS values) -> (fingerprint, inferred schema);
+# a changed fingerprint replaces its path's entry, so this holds one
+# entry per distinct path and conf combination.  Threads racing on one
+# key each infer and store a whole (fingerprint, schema) pair, so no
+# lock is needed.
+_SCHEMAS: dict[tuple, tuple[tuple, StructType]] = {}
+
+
+def _fingerprint(spark: SparkSession, path: str) -> tuple[str, tuple]:
+    """(qualified path, fingerprint) of a file or directory, from the
+    same few FileSystem calls however many files it holds."""
+    # a direct JavaClass skips py4j's package-by-package lookup of
+    # org.apache.hadoop.fs, which costs more than the FileSystem calls
+    p = JavaClass("org.apache.hadoop.fs.Path", spark._jvm._gateway_client)(path)
+    fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
+    status = fs.getFileStatus(p)
+    fingerprint = (status.getLen(), status.getModificationTime())
+    if status.isDirectory():
+        summary = fs.getContentSummary(p)
+        fingerprint += (summary.getLength(), summary.getFileCount(), summary.getDirectoryCount())
+    return fs.makeQualified(p).toString(), fingerprint
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)``, minus the schema-inference job
+    while ``path`` is unchanged (see the module's scale notes).
+
+    The schema is cached, never the DataFrame: every call builds a new
+    relation with fresh expression ids, so two loads of one table
+    self-join unambiguously.  A path the fingerprint cannot stat (a
+    glob, a missing file) takes the plain read, and its error."""
+    try:
+        qualified, fingerprint = _fingerprint(spark, path)
+    except Py4JJavaError:
+        return spark.read.parquet(path)
+    key = (qualified, tuple(spark.conf.get(c) for c in SCHEMA_CONFS))
+    cached = _SCHEMAS.get(key)
+    if cached is not None and cached[0] == fingerprint:
+        # load(str) is parquet(path) without its Python-to-Seq conversion
+        return spark.read.schema(cached[1]).format("parquet").load(path)
+    df = spark.read.parquet(path)
+    _SCHEMAS[key] = (fingerprint, df.schema)
+    return df
 
 
 def ntz_as_utc_instant(spark: SparkSession, col_name: str):
@@ -71,7 +141,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # cost at 100 TB where ts range filters prune row groups), and
     # needs no per-row conversion.
     spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    df = read_parquet(spark, os.path.join(sf_dir, f"{name}.parquet"))
     from pyspark.sql import functions as F
     from pyspark.sql.types import TimestampNTZType
 
@@ -164,6 +234,6 @@ def compact_files(
         )
     total = fs.getContentSummary(p).getLength()
     n_files = max(1, -(-int(total) // int(target_file_bytes)))
-    df = spark.read.parquet(path)
+    df = read_parquet(spark, path)
     df.repartition(n_files).write.mode("overwrite").parquet(out_path)
     return n_files

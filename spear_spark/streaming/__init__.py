@@ -35,6 +35,7 @@ from pyspark.sql.types import (
 # import the constants rather than repeating literals so a batch-side
 # change can never silently desync the stream producers.
 from spear_spark.operators.sketch import CM_DEPTH, CM_WIDTH, HLL_M
+from spear_spark.sources import read_parquet
 
 # legacy events.parquet physical schema (older testdata stored ts as
 # TIMESTAMP(NANOS), which Spark reads as long under nanosAsLong —
@@ -55,8 +56,9 @@ def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """File-source stream over the events directory with the explicit
     schema streaming requires (no inference on streams).
 
-    The schema comes from a one-time batch footer read under the same
-    reader conf as :func:`spear_spark.sources.load_table` (nanos→long,
+    The schema comes from a batch footer read (inferred once per
+    unchanged file by :func:`spear_spark.sources.read_parquet`) under
+    the same reader conf as :func:`spear_spark.sources.load_table` (nanos→long,
     NTZ inference off), so the stream sees the identical ts type the
     batch path does regardless of which writer produced the files —
     TIMESTAMP(NANOS) testdata arrives as long (converted to µs below),
@@ -66,7 +68,7 @@ def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-    schema = spark.read.parquet(os.path.join(sf_dir, "events.parquet")).schema
+    schema = read_parquet(spark, os.path.join(sf_dir, "events.parquet")).schema
     # the file source lists a directory; events is a single file, so
     # point at the dir and glob-filter (in production: a landing dir
     # receiving new files, or Kafka)
@@ -400,7 +402,7 @@ def read_cdc_state(spark: SparkSession, state_path: str) -> DataFrame | None:
     v = _latest_cdc_version(state_path)
     if v is None:
         return None
-    df = spark.read.parquet(os.path.join(state_path, f"v={v}"))
+    df = read_parquet(spark, os.path.join(state_path, f"v={v}"))
     if "_tombstone" not in df.columns:  # pre-tombstone format: live rows only
         return df
     return df.filter(~F.col("_tombstone")).drop("_tombstone")
@@ -464,9 +466,7 @@ def cdc_state_stream(
         )
         prev_vs = [v for v in _cdc_versions(state_path) if v < batch_id]
         if prev_vs:
-            prev = spark.read.parquet(
-                os.path.join(state_path, f"v={max(prev_vs)}")
-            )
+            prev = read_parquet(spark, os.path.join(state_path, f"v={max(prev_vs)}"))
             if "_tombstone" not in prev.columns:
                 # state written by the pre-tombstone format stored live
                 # rows only, so _tombstone=false is a faithful migration

@@ -1,14 +1,45 @@
 """Sources + scale-machinery tests: file-format round-trips (the
 reference has zero connectors, SURVEY §2.3 — Spark gives them free),
-bucketed shuffle-free joins, and salted skew joins."""
+bucketed shuffle-free joins, salted skew joins, and the parquet schema
+cache behind ``sources.read_parquet``."""
 
+import ast
 import os
+import uuid
+from pathlib import Path
 
+import pyarrow as pa
+import pyarrow.parquet as pq
+import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.types import BinaryType, StringType
 
+from spear_spark import sources
 from spear_spark.operators.skew import salted_join
 from spear_spark.plans import executed_plan
-from spear_spark.sources import load_table, write_bucketed
+from spear_spark.relational import QUERIES
+from spear_spark.sources import TABLES, load_table, read_parquet, write_bucketed
+
+PKG = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "spear_spark")
+
+
+def _with_jobs(spark, build):
+    """(build(), number of Spark jobs it launched), counted through a
+    job group once the listener bus has delivered every job event."""
+    sc = spark.sparkContext
+    group = f"jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = build()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty(30_000)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.fixture
+def empty_schema_cache(monkeypatch):
+    monkeypatch.setattr(sources, "_SCHEMAS", {})
 
 
 def test_parquet_csv_json_roundtrip(spark, sf_dir, tmp_path):
@@ -240,3 +271,118 @@ def test_ntz_fallback_is_session_timezone_proof(spark, tmp_path):
         )
     finally:
         spark.conf.set("spark.sql.session.timeZone", prev_tz)
+
+
+# -- parquet schema cache (sources.read_parquet) ------------------------------
+
+
+def test_no_raw_parquet_reads_outside_read_parquet():
+    """AST, not grep: every ``<x>.read.parquet(...)`` in the package is
+    inside ``sources.read_parquet``.  Option chains
+    (``read.option(...).parquet``, as in ``read_merged_schema``) are
+    not the plain read this guards."""
+    offenders = []
+    for root, _, files in os.walk(PKG):
+        for name in files:
+            if not name.endswith(".py"):
+                continue
+            path = os.path.join(root, name)
+            tree = ast.parse(Path(path).read_text(), path)
+            allowed = set()
+            if os.path.relpath(path, PKG) == os.path.join("sources", "__init__.py"):
+                fn = next(n for n in tree.body if isinstance(n, ast.FunctionDef) and n.name == "read_parquet")
+                allowed = {id(n) for n in ast.walk(fn)}
+            for node in ast.walk(tree):
+                if (
+                    isinstance(node, ast.Call)
+                    and isinstance(node.func, ast.Attribute)
+                    and node.func.attr == "parquet"
+                    and isinstance(node.func.value, ast.Attribute)
+                    and node.func.value.attr == "read"
+                    and id(node) not in allowed
+                ):
+                    offenders.append(f"{os.path.relpath(path, PKG)}:{node.lineno}")
+    assert offenders == []
+
+
+def test_warm_load_table_runs_no_job(spark, sf_dir, empty_schema_cache):
+    for name in TABLES:
+        cold, cold_jobs = _with_jobs(spark, lambda: load_table(spark, sf_dir, name))
+        warm, warm_jobs = _with_jobs(spark, lambda: load_table(spark, sf_dir, name))
+        assert (cold_jobs >= 1, warm_jobs) == (True, 0), name
+        assert warm.schema == cold.schema, name
+        # the raw read, under the confs load_table set, nullability included
+        path = os.path.join(sf_dir, f"{name}.parquet")
+        assert read_parquet(spark, path).schema == spark.read.parquet(path).schema, name
+
+
+def test_rewritten_file_is_inferred_afresh(spark, tmp_path):
+    path = str(tmp_path / "t.parquet")
+    pq.write_table(pa.table({"a": [1, 2]}), path)
+    assert read_parquet(spark, path).columns == ["a"]
+    pq.write_table(pa.table({"a": [1, 2], "b": ["x", "y"]}), path)
+    got = read_parquet(spark, path)
+    assert got.columns == ["a", "b"]
+    assert sorted(tuple(r) for r in got.collect()) == [(1, "x"), (2, "y")]
+
+
+def test_overwritten_directory_is_inferred_afresh(spark, tmp_path):
+    path = str(tmp_path / "d")
+    spark.range(2).write.parquet(path)
+    assert read_parquet(spark, path).columns == ["id"]
+    spark.range(2).withColumn("x", F.lit("s")).write.mode("overwrite").parquet(path)
+    assert read_parquet(spark, path).columns == ["id", "x"]
+
+
+def test_appended_directory_is_inferred_afresh(spark, tmp_path):
+    """Under mergeSchema the appended file's new column joins the
+    inferred schema; the conf is the same for both reads, so only the
+    fingerprint can tell them apart."""
+    path = str(tmp_path / "a")
+    spark.conf.set("spark.sql.parquet.mergeSchema", "true")
+    try:
+        spark.range(2).write.parquet(path)
+        assert read_parquet(spark, path).columns == ["id"]
+        spark.range(2).withColumn("y", F.lit(1.0)).write.mode("append").parquet(path)
+        got = read_parquet(spark, path)
+        assert got.schema == spark.read.parquet(path).schema
+        assert got.columns == ["id", "y"]
+    finally:
+        spark.conf.unset("spark.sql.parquet.mergeSchema")
+
+
+def test_schema_conf_change_is_inferred_afresh(spark, tmp_path):
+    path = str(tmp_path / "b.parquet")
+    pq.write_table(pa.table({"b": pa.array([b"x"], pa.binary())}), path)
+    assert read_parquet(spark, path).schema["b"].dataType == BinaryType()
+    spark.conf.set("spark.sql.parquet.binaryAsString", "true")
+    try:
+        assert read_parquet(spark, path).schema["b"].dataType == StringType()
+    finally:
+        spark.conf.unset("spark.sql.parquet.binaryAsString")
+    assert read_parquet(spark, path).schema["b"].dataType == BinaryType()
+
+
+def test_two_loads_of_one_table_self_join(spark, sf_dir):
+    """The cache holds schemas, not DataFrames: two loads are distinct
+    relations, so column references pick a side."""
+    a = load_table(spark, sf_dir, "nation")
+    b = load_table(spark, sf_dir, "nation")
+    got = a.join(b, a["n_regionkey"] == b["n_nationkey"]).select(a["n_name"], b["n_name"])
+    rows = a.select("n_nationkey", "n_regionkey", "n_name").collect()
+    names = {r.n_nationkey: r.n_name for r in rows}
+    want = sorted((r.n_name, names[r.n_regionkey]) for r in rows if r.n_regionkey in names)
+    assert sorted(tuple(r) for r in got.collect()) == want
+
+
+@pytest.mark.parametrize(
+    "name",
+    ["q28_word_counts", "q43_multigrain_rollup", "q77_group_by_all", "q65_parts_supplier_relationship"],
+)
+def test_workload_query_rebuild_runs_no_job(spark, sf_dir, name):
+    """Construction-jobs census: a second build of a benchmark query,
+    with no action, launches no Spark job."""
+    build = QUERIES[name][0]
+    build(spark, sf_dir)
+    _, jobs = _with_jobs(spark, lambda: build(spark, sf_dir))
+    assert jobs == 0
