@@ -25,6 +25,7 @@ from __future__ import annotations
 import hashlib
 from typing import Iterator
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -489,6 +490,19 @@ def wav_sample(key: str, i: int) -> int:
     return int(hashlib.md5(f"{key}_{i}".encode()).hexdigest()[:4], 16) - 32768
 
 
+def _wav_pcm(key: str, n: int, decimals: list[bytes]) -> bytes:
+    """Little-endian int16 PCM of ``wav_sample(key, i)`` for i < n, in
+    one pass: the first two md5 digest bytes, read big-endian, ARE
+    ``int(hexdigest()[:4], 16)``, so the clip is the joined digest
+    slices shifted by 32768 in one numpy conversion.  ``decimals[i]``
+    is ``str(i)`` encoded, shared across a batch's rows."""
+    prefix = f"{key}_".encode()
+    md5 = hashlib.md5
+    hi = b"".join([md5(prefix + d).digest()[:2] for d in decimals[:n]])
+    u = np.frombuffer(hi, ">u2").astype(np.int32)
+    return (u - 32768).astype("<i2").tobytes()
+
+
 def attach_wav(
     df: DataFrame, source_col: str, id_col: str = "doc_id"
 ) -> DataFrame:
@@ -496,9 +510,14 @@ def attach_wav(
     ``wave`` writer): sample rate, length, and every sample are pure
     md5 functions of the row's text and id, so a downstream parse can
     be certified against an independent SQL replay byte-for-byte.
-    Arrow-batched ``mapInPandas``; emits (id, payload)."""
+    Arrow-batched ``mapInPandas``; emits (id, payload).
+
+    Scale shape: one projection, no shuffle.  Each clip's PCM is built
+    by :func:`_wav_pcm` (one md5 per sample, as the spec requires, but
+    no per-sample int parse or struct pack), byte-identical to packing
+    :func:`wav_sample`; the md5 calls are the remaining per-sample
+    cost, and they parallelize with the input's scan splits."""
     import io
-    import struct
     import wave
 
     out_schema = StructType(
@@ -507,22 +526,33 @@ def attach_wav(
 
     def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
+            params = [wav_params(txt) for txt in pdf[source_col]]
+            longest = max((n for _rate, n in params), default=0)
+            decimals = [str(i).encode() for i in range(longest)]
             payloads = []
-            for rid, txt in zip(pdf[id_col], pdf[source_col]):
-                rate, n = wav_params(txt)
-                samples = [wav_sample(str(int(rid)), i) for i in range(n)]
+            for rid, (rate, n) in zip(pdf[id_col], params):
                 buf = io.BytesIO()
                 with wave.open(buf, "wb") as w:
                     w.setnchannels(1)
                     w.setsampwidth(2)
                     w.setframerate(rate)
-                    w.writeframes(struct.pack(f"<{n}h", *samples))
+                    w.writeframes(_wav_pcm(str(int(rid)), n, decimals))
                 payloads.append(buf.getvalue())
             yield pd.DataFrame(
                 {id_col: pdf[id_col].astype("int64"), "payload": payloads}
             )
 
     return df.select(F.col(id_col), F.col(source_col)).mapInPandas(build, out_schema)
+
+
+def _pcm16_stats(raw: bytes) -> tuple[int, int]:
+    """(Σ sample², max |sample|) of little-endian int16 PCM, exact:
+    samples widen to int64 BEFORE ``abs`` (|-32768| overflows int16)
+    and before squaring.  An empty clip gives (0, 0)."""
+    v = np.frombuffer(raw, "<i2").astype(np.int64)
+    if not v.size:
+        return 0, 0
+    return int((v * v).sum()), int(np.abs(v).max())
 
 
 def decode_wav(
@@ -540,10 +570,13 @@ def decode_wav(
     (the embedding_gram contract: a silent skip biases every stat).
 
     Scale shape: one Arrow-batched ``mapInPandas`` projection — no
-    shuffle; the parse is per-row stdlib code on in-memory bytes, the
-    same posture as image decode."""
+    shuffle; the header parse is per-row stdlib ``wave`` code on
+    in-memory bytes (the image-decode posture), and the sample stats
+    are one numpy reduction per clip (:func:`_pcm16_stats`), not a
+    Python loop per sample.  A data chunk shorter than its header's
+    frame count raises with the id rather than giving stats over the
+    samples that happen to be there."""
     import io
-    import struct
     import wave
 
     out_schema = StructType(
@@ -582,17 +615,15 @@ def decode_wav(
                         f"decode_wav: id={int(rid)} has {8 * width}-bit "
                         "samples — only 16-bit PCM is supported"
                     )
-                vals = struct.unpack(f"<{n * ch}h", raw)
-                rows.append(
-                    (
-                        int(rid),
-                        ch,
-                        rate,
-                        n,
-                        n * 1_000_000 // rate,
-                        sum(v * v for v in vals),
-                        max((abs(v) for v in vals), default=0),
+                if len(raw) != n * ch * 2:
+                    raise ValueError(
+                        f"decode_wav: truncated WAV id={int(rid)}: header "
+                        f"says {n} frames ({n * ch * 2} bytes), data has "
+                        f"{len(raw)} bytes"
                     )
+                sumsq, peak = _pcm16_stats(raw)
+                rows.append(
+                    (int(rid), ch, rate, n, n * 1_000_000 // rate, sumsq, peak)
                 )
             yield pd.DataFrame(
                 rows,
@@ -717,6 +748,28 @@ def _y4m_parse(payload, rid: int):
     return w, h, num, den, planes
 
 
+def _frames(planes: list[bytes], plane: int) -> np.ndarray:
+    """The clip's planes as one (n_frames, plane) uint8 array."""
+    return np.frombuffer(b"".join(planes), np.uint8).reshape(len(planes), plane)
+
+
+def _luma_stats(planes: list[bytes], plane: int) -> tuple[int, int]:
+    """(Σ plane bytes, max byte) over a clip, exact; (0, 0) for a clip
+    with no frames."""
+    lum = _frames(planes, plane)
+    if not lum.size:
+        return 0, 0
+    return int(lum.sum(dtype=np.int64)), int(lum.max())
+
+
+def _frame_sads(planes: list[bytes], plane: int) -> list[int]:
+    """Sum of absolute luma differences per consecutive frame pair
+    (empty for fewer than two frames); int16 holds every byte
+    difference and the row sums accumulate in int64."""
+    f = _frames(planes, plane).astype(np.int16)
+    return np.abs(f[1:] - f[:-1]).sum(axis=1, dtype=np.int64).tolist()
+
+
 def decode_y4m(
     df: DataFrame, id_col: str = "doc_id", payload_col: str = "payload"
 ) -> DataFrame:
@@ -731,8 +784,9 @@ def decode_y4m(
     Malformed payloads and non-mono colorspaces raise with the id.
 
     Scale shape: one Arrow-batched ``mapInPandas`` projection — no
-    shuffle; stdlib-free byte walking per row (the decode_wav
-    posture)."""
+    shuffle; the header and FRAME markers are walked per row in
+    Python, and the luma sum and max are one numpy reduction over the
+    clip's planes (:func:`_luma_stats`, the decode_wav posture)."""
     out_schema = StructType(
         [
             StructField(id_col, LongType()),
@@ -752,8 +806,7 @@ def decode_y4m(
             rows = []
             for rid, payload in zip(pdf[id_col], pdf[payload_col]):
                 w, h, num, den, planes = _y4m_parse(payload, int(rid))
-                lsum = sum(sum(p) for p in planes)
-                lmax = max((max(p) for p in planes), default=0)
+                lsum, lmax = _luma_stats(planes, w * h)
                 frames = len(planes)
                 rows.append(
                     (
@@ -793,8 +846,9 @@ def frame_cut_profile(
 
     Scale shape: one Arrow-batched ``mapInPandas`` projection over the
     payload column (the :func:`decode_y4m` posture — same shared
-    walker, same five loud failure modes); no shuffle anywhere, state
-    is two consecutive planes per row."""
+    walker, same five loud failure modes); no shuffle anywhere.  The
+    pair SADs are one numpy difference over the clip's stacked planes
+    (:func:`_frame_sads`), so a row holds its whole clip as int16."""
     out_schema = StructType(
         [
             StructField(id_col, LongType()),
@@ -811,21 +865,16 @@ def frame_cut_profile(
         for pdf in batches:
             rows = []
             for rid, payload in zip(pdf[id_col], pdf[payload_col]):
-                _w, _h, _num, _den, planes = _y4m_parse(payload, int(rid))
-                sad_sum = sad_max = n_cuts = 0
-                for a, b in zip(planes, planes[1:]):
-                    sad = sum(abs(x - y) for x, y in zip(a, b))
-                    sad_sum += sad
-                    sad_max = max(sad_max, sad)
-                    n_cuts += sad >= thr
+                w, h, _num, _den, planes = _y4m_parse(payload, int(rid))
+                sads = _frame_sads(planes, w * h)
                 rows.append(
                     (
                         int(rid),
                         len(planes),
-                        max(len(planes) - 1, 0),
-                        sad_sum,
-                        sad_max,
-                        n_cuts,
+                        len(sads),
+                        sum(sads),
+                        max(sads, default=0),
+                        sum(sad >= thr for sad in sads),
                     )
                 )
             yield pd.DataFrame(

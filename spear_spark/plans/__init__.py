@@ -19,14 +19,26 @@ import re
 from pyspark.sql import DataFrame
 
 
+_METADATA_LENGTH = "spark.sql.maxMetadataStringLength"
+
+
 def executed_plan(df: DataFrame, run: bool = True) -> str:
-    """Final physical plan text (post-AQE when ``run``)."""
+    """Final physical plan text (post-AQE when ``run``).  The session's
+    conf is left as it was found."""
+    conf = df.sparkSession.conf
+    previous = conf.get(_METADATA_LENGTH, None)
     # default metadata strings truncate at 100 chars, cutting off
     # PushedFilters/ReadSchema lists mid-entry
-    df.sparkSession.conf.set("spark.sql.maxMetadataStringLength", "10000")
-    if run:
-        df.count()
-    return df._jdf.queryExecution().executedPlan().toString()
+    conf.set(_METADATA_LENGTH, "10000")
+    try:
+        if run:
+            df.count()
+        return df._jdf.queryExecution().executedPlan().toString()
+    finally:
+        if previous is None:
+            conf.unset(_METADATA_LENGTH)
+        else:
+            conf.set(_METADATA_LENGTH, previous)
 
 
 def optimized_plan(df: DataFrame) -> str:

@@ -64,12 +64,33 @@ def test_theta_join_is_hash_plus_residual(spark, sf_dir):
 
 
 def test_partition_count_respects_conf(spark, sf_dir):
-    """AQE coalesces the 32 configured shuffle partitions down for the
-    tiny local input — the same plan fans out on a cluster."""
+    """AQE coalesces the configured shuffle partitions (4 on the test
+    session) down for the tiny local input — the same plan fans out on
+    a cluster."""
     df = QUERIES["q01_pricing_summary"][0](spark, sf_dir)
     assert df.rdd.getNumPartitions() <= int(
         spark.conf.get("spark.sql.shuffle.partitions")
     )
+
+
+def test_executed_plan_leaves_session_conf_unchanged(spark, sf_dir):
+    """The plan helper widens metadata strings only for its own call:
+    an unset conf stays unset and a set one keeps its value."""
+    key = "spark.sql.maxMetadataStringLength"
+    df = QUERIES["q02_filter_topk"][0](spark, sf_dir)
+    previous = spark.conf.get(key, None)
+    try:
+        spark.conf.unset(key)
+        assert "ReadSchema" in executed_plan(df)
+        assert spark.conf.get(key, None) is None
+        spark.conf.set(key, "123")
+        executed_plan(df, run=False)
+        assert spark.conf.get(key) == "123"
+    finally:
+        if previous is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, previous)
 
 
 def test_dedup_exact_partial_aggregates(spark, sf_dir):
@@ -759,23 +780,32 @@ class TestWidenNarrowScan:
 
     def test_bin_packed_small_files_still_widen(self, spark, tmp_path):
         """Spark bin-packs tiny files into shared partitions, so file
-        COUNT must not gate the widen: 8 one-row files >= 4 cores but
-        only a few scan partitions — the widener must still fire."""
+        COUNT must not gate the widen: more one-row files than cores but
+        fewer scan partitions than cores — the widener must still fire.
+        With ``files.minPartitionNum=1`` the split size is the whole
+        input, so the files pack into fewer partitions than cores."""
         from spear_spark.operators.dedup import _widen_narrow_scan
 
+        cores = spark.sparkContext.defaultParallelism
         src = str(tmp_path / "tiny")
         spark.createDataFrame(
             [(i, f"doc {i}") for i in range(16)], "doc_id long, text string"
         ).repartition(16).write.parquet(src)
-        df = spark.read.parquet(src)
-        # more files than cores — the file-count proxy would skip
-        assert len(df.inputFiles()) >= spark.sparkContext.defaultParallelism
-        if df.rdd.getNumPartitions() < spark.sparkContext.defaultParallelism:
+        key = "spark.sql.files.minPartitionNum"
+        previous = spark.conf.get(key, None)
+        spark.conf.set(key, "1")
+        try:
+            df = spark.read.parquet(src)
+            # more files than cores — the file-count proxy would skip
+            assert len(df.inputFiles()) >= cores
+            assert df.rdd.getNumPartitions() < cores
             out = _widen_narrow_scan(df)
-            assert (
-                out.rdd.getNumPartitions()
-                == spark.sparkContext.defaultParallelism
-            )
+            assert out.rdd.getNumPartitions() == cores
+        finally:
+            if previous is None:
+                spark.conf.unset(key)
+            else:
+                spark.conf.set(key, previous)
 
 
 def test_score_auc_cell_histogram_shape(spark, sf_dir):
