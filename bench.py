@@ -8,8 +8,7 @@ and null otherwise (e.g. a scripts/make_scaled_dir.py output).
     python bench.py p05_ngram_jaccard    # just the named queries
 
 The session setup, the timed loop and the persisted-RDD drop are also
-the harness of scripts/scaling_run.py, profile_query.py and
-capture_plans.py.
+the harness of scripts/scaling_run.py and profile_query.py.
 
 Each query is executed three times and the MEDIAN is reported — the
 JVM-warmup first run and transient machine load both fall out, so

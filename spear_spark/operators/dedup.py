@@ -579,7 +579,7 @@ def _shingle_pair_intersections(
         # same `s` hash partitioning the downstream groupBy needs, and
         # the explode recompute is cheap off the checkpointed arrays
         # (the older count+semi-join measurement that looked ~25% slower
-        # predates the checkpointed staging — see DESIGN.md round-9 A/B).
+        # predates the checkpointed staging; A/B in DESIGN.md, "Dedup family").
         # shuffle_hash: the build side is the surviving-shingle set
         # (vocabulary-sized, hash-sharded across partitions), and the
         # hint keeps the posting stream UNSORTED — SortMergeJoin would
@@ -743,12 +743,13 @@ def _small_star_directed(d: DataFrame) -> DataFrame:
     emits (its output (u', v') = (v, m) always has u' > v' because
     m ≤ u < v, and it ends in ``.distinct()``), so the CC round loop
     composes this directly and skips :func:`_small_star`'s
-    re-orientation + re-distinct.  Measured honestly
-    (plans/r14/cc_round_{before,after}.txt): Catalyst had ALREADY
-    collapsed the redundant distinct — exchange and aggregate counts
-    are identical (11 exchanges either way) — so the only plan delta
-    is the removed per-row ``greatest``/``least`` evaluations in the
-    round's join conditions and projections (6 expression sites → 0).
+    re-orientation + re-distinct.  Measured honestly (plans at
+    ``git show a91a9bd:plans/r14/cc_round_{before,after}.txt``):
+    Catalyst had ALREADY collapsed the redundant distinct — exchange
+    and aggregate counts are identical (11 exchanges either way) — so
+    the only plan delta is the removed per-row ``greatest``/``least``
+    evaluations in the round's join conditions and projections (6
+    expression sites → 0).
     A/B at sf0.1 accordingly neutral (p102 7.71→7.41 s, p135
     5.52→5.49 s medians); kept for the simpler round plan, not claimed
     as a shuffle win.  (Also measured: additionally dropping

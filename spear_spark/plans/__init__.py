@@ -22,17 +22,17 @@ from pyspark.sql import DataFrame
 _METADATA_LENGTH = "spark.sql.maxMetadataStringLength"
 
 
-def executed_plan(df: DataFrame, run: bool = True) -> str:
-    """Final physical plan text (post-AQE when ``run``).  The session's
-    conf is left as it was found."""
+def executed_plan(df: DataFrame) -> str:
+    """Initial physical plan text, built without running a job: under
+    AQE it reads ``AdaptiveSparkPlan isFinalPlan=false`` (only the
+    DataFrame's own action finalizes it).  The session's conf is left
+    as it was found."""
     conf = df.sparkSession.conf
     previous = conf.get(_METADATA_LENGTH, None)
     # default metadata strings truncate at 100 chars, cutting off
     # PushedFilters/ReadSchema lists mid-entry
     conf.set(_METADATA_LENGTH, "10000")
     try:
-        if run:
-            df.count()
         return df._jdf.queryExecution().executedPlan().toString()
     finally:
         if previous is None:

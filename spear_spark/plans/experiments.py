@@ -14,7 +14,9 @@ from __future__ import annotations
 
 from contextlib import contextmanager
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
+
+from spear_spark.plans import optimized_plan
 
 # rules whose effect the engine depends on (SURVEY §4.1 mapping table)
 RULES = {
@@ -48,7 +50,7 @@ def plan_diff(df_factory, spark: SparkSession, *rule_names: str) -> tuple[str, s
     """(optimized plan with rules, optimized plan without) for the query
     built by ``df_factory()`` — the plan must be constructed inside each
     config regime, since exclusion applies at optimization time."""
-    with_plan = df_factory()._jdf.queryExecution().optimizedPlan().toString()
+    with_plan = optimized_plan(df_factory())
     with rules_excluded(spark, *rule_names):
-        without_plan = df_factory()._jdf.queryExecution().optimizedPlan().toString()
+        without_plan = optimized_plan(df_factory())
     return with_plan, without_plan

@@ -1,5 +1,6 @@
 import os
 import sys
+import uuid
 
 import pytest
 
@@ -27,6 +28,26 @@ def ctx(spark):
     from spear_spark import Context
 
     return Context(spark)
+
+
+@pytest.fixture
+def with_jobs(spark):
+    """``with_jobs(build)`` is (build(), number of Spark jobs it
+    launched), counted through a job group once the listener bus has
+    delivered every job event."""
+    sc = spark.sparkContext
+
+    def run(build):
+        group = f"jobs-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        try:
+            out = build()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty(30_000)
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return run
 
 
 @pytest.fixture

@@ -1,9 +1,9 @@
 """Shared corpus replicators for the 10x scale-up harness — ONE
 definition used by both the scaled-dir builder (scripts/make_scaled_dir.py)
 and the ratio pins (tests/test_scaleup.py), so the measured corpus and
-the pinned corpus cannot silently drift apart.  The retired timing
-script that recorded the docs/DESIGN.md scale-up walls is readable at
-``git show f732efd:scripts/dedup_scaleup.py``.
+the pinned corpus cannot silently drift apart.  The walls it measured
+are in docs/DESIGN.md, "Scale-up"; the retired timing script is
+readable at ``git show f732efd:scripts/dedup_scaleup.py``.
 
 Both replicators build reps ISOMORPHIC copies of the input with ids
 shifted into disjoint ranges (``ID_SHIFT`` apart):

@@ -4,7 +4,7 @@ the runnable version of SURVEY §4.1's spear-rule → Catalyst mapping."""
 
 from pyspark.sql import functions as F
 
-from spear_spark.plans import pushed_filters, read_schemas
+from spear_spark.plans import executed_plan, pushed_filters, read_schemas
 from spear_spark.plans.experiments import plan_diff, rules_excluded
 from spear_spark.sources import load_table
 
@@ -35,10 +35,7 @@ def test_column_pruning_rule_effect(spark, sf_dir):
         return li.select("l_orderkey", "l_quantity").limit(10)
 
     # executed (not just optimized) plan shows ReadSchema
-    df = q()
-    df.count()
-    spark.conf.set("spark.sql.maxMetadataStringLength", "10000")
-    pruned = read_schemas(df._jdf.queryExecution().executedPlan().toString())[0]
+    pruned = read_schemas(executed_plan(q()))[0]
     assert set(pruned) == {"l_orderkey", "l_quantity"}
 
 

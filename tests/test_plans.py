@@ -73,18 +73,20 @@ def test_partition_count_respects_conf(spark, sf_dir):
     )
 
 
-def test_executed_plan_leaves_session_conf_unchanged(spark, sf_dir):
+def test_executed_plan_leaves_session_conf_unchanged(spark, sf_dir, with_jobs):
     """The plan helper widens metadata strings only for its own call:
-    an unset conf stays unset and a set one keeps its value."""
+    an unset conf stays unset and a set one keeps its value.  It reads
+    the plan without running the query: zero Spark jobs."""
     key = "spark.sql.maxMetadataStringLength"
     df = QUERIES["q02_filter_topk"][0](spark, sf_dir)
     previous = spark.conf.get(key, None)
     try:
         spark.conf.unset(key)
-        assert "ReadSchema" in executed_plan(df)
+        plan, jobs = with_jobs(lambda: executed_plan(df))
+        assert ("ReadSchema" in plan, jobs) == (True, 0)
         assert spark.conf.get(key, None) is None
         spark.conf.set(key, "123")
-        executed_plan(df, run=False)
+        executed_plan(df)
         assert spark.conf.get(key) == "123"
     finally:
         if previous is None:
@@ -1259,13 +1261,11 @@ def test_unbounded_spn_checker_self_test(spark, sf_dir):
     from spear_spark.sources import load_table
 
     li = load_table(spark, sf_dir, "lineitem")
-    raw = executed_plan(li.repartition(1).select("l_orderkey"), run=False)
+    raw = executed_plan(li.repartition(1).select("l_orderkey"))
     assert _unbounded_single_partition_exchanges(raw), (
         "checker failed to flag a raw-scan-fed SinglePartition exchange"
     )
-    ok = executed_plan(
-        li.groupBy("l_returnflag").count().repartition(1), run=False
-    )
+    ok = executed_plan(li.groupBy("l_returnflag").count().repartition(1))
     assert ok.count("Exchange SinglePartition") == 1
     assert not _unbounded_single_partition_exchanges(ok), (
         "checker flagged an aggregate-bounded SinglePartition exchange"
@@ -1273,7 +1273,7 @@ def test_unbounded_spn_checker_self_test(spark, sf_dir):
     # a limit is bounded too: df.limit(n) plans GlobalLimit <-
     # Exchange SinglePartition <- LocalLimit <- Scan, and the only
     # bounding node INSIDE the checked path is the LocalLimit
-    lim = executed_plan(li.limit(5), run=False)
+    lim = executed_plan(li.limit(5))
     if "Exchange SinglePartition" in lim:
         assert not _unbounded_single_partition_exchanges(lim), (
             "checker flagged a limit-bounded SinglePartition exchange"
@@ -1312,7 +1312,7 @@ def test_catalog_sweep_no_unpinned_single_partition_exchange(spark, sf_dir):
     qs = entry_mod.queries()
     bad: list[str] = []
     for name, fn in qs.items():
-        plan = executed_plan(fn(spark, sf_dir), run=False)
+        plan = executed_plan(fn(spark, sf_dir))
         n = plan.count("Exchange SinglePartition")
         if n > _SINGLE_PARTITION_ALLOWED.get(name, 0):
             bad.append(f"{name}: {n} > {_SINGLE_PARTITION_ALLOWED.get(name, 0)}")

@@ -5,7 +5,6 @@ cache behind ``sources.read_parquet``."""
 
 import ast
 import os
-import uuid
 from pathlib import Path
 
 import pyarrow as pa
@@ -21,20 +20,6 @@ from spear_spark.relational import QUERIES
 from spear_spark.sources import TABLES, load_table, read_parquet, write_bucketed
 
 PKG = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "spear_spark")
-
-
-def _with_jobs(spark, build):
-    """(build(), number of Spark jobs it launched), counted through a
-    job group once the listener bus has delivered every job event."""
-    sc = spark.sparkContext
-    group = f"jobs-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, group)
-    try:
-        out = build()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    sc._jsc.sc().listenerBus().waitUntilEmpty(30_000)
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 @pytest.fixture
@@ -305,10 +290,10 @@ def test_no_raw_parquet_reads_outside_read_parquet():
     assert offenders == []
 
 
-def test_warm_load_table_runs_no_job(spark, sf_dir, empty_schema_cache):
+def test_warm_load_table_runs_no_job(spark, sf_dir, empty_schema_cache, with_jobs):
     for name in TABLES:
-        cold, cold_jobs = _with_jobs(spark, lambda: load_table(spark, sf_dir, name))
-        warm, warm_jobs = _with_jobs(spark, lambda: load_table(spark, sf_dir, name))
+        cold, cold_jobs = with_jobs(lambda: load_table(spark, sf_dir, name))
+        warm, warm_jobs = with_jobs(lambda: load_table(spark, sf_dir, name))
         assert (cold_jobs >= 1, warm_jobs) == (True, 0), name
         assert warm.schema == cold.schema, name
         # the raw read, under the confs load_table set, nullability included
@@ -379,10 +364,10 @@ def test_two_loads_of_one_table_self_join(spark, sf_dir):
     "name",
     ["q28_word_counts", "q43_multigrain_rollup", "q77_group_by_all", "q65_parts_supplier_relationship"],
 )
-def test_workload_query_rebuild_runs_no_job(spark, sf_dir, name):
+def test_workload_query_rebuild_runs_no_job(spark, sf_dir, name, with_jobs):
     """Construction-jobs census: a second build of a benchmark query,
     with no action, launches no Spark job."""
     build = QUERIES[name][0]
     build(spark, sf_dir)
-    _, jobs = _with_jobs(spark, lambda: build(spark, sf_dir))
+    _, jobs = with_jobs(lambda: build(spark, sf_dir))
     assert jobs == 0
