@@ -42,7 +42,10 @@ def main() -> int:
     con = duck_connection(sf_dir)
     names = list(qs)[:50] if window_only else list(qs)
     bad = []
-    for name in names:
+    for i, name in enumerate(names, 1):
+        # flushed before the query runs, so the Spark log lines that
+        # follow (stderr) can be attributed to it
+        print(f"[{i}/{len(names)}] {name}", flush=True)
         try:
             if name in osql:
                 problems = compare(qs[name](spark, sf_dir), con, osql[name])

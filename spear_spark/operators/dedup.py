@@ -766,26 +766,51 @@ def _small_star_directed(d: DataFrame) -> DataFrame:
     return rewired.unionAll(self_edges).distinct()
 
 
+#: Edge-count bound of :func:`connected_components`' driver regime.  An
+#: edge set of at most this many rows is read to the driver in one
+#: bounded Arrow read and solved by a union-find; a larger one runs the
+#: distributed rounds.  Sized so that the read plus the union-find at the
+#: bound costs less than ONE distributed round over as many edges (the
+#: connected-components bullet of docs/DESIGN.md, "Dedup family"): a
+#: ~100-edge graph no longer pays ~8 Spark jobs per round on any
+#: cluster.  At the bound the driver
+#: holds 1.6 MB of edges; above it the read stands in for the stage's
+#: eager count, so the distributed path runs no extra job.
+_LOCAL_CC_EDGES = 100_000
+
+
 def connected_components(
     pairs: DataFrame, a: str = "doc_a", b: str = "doc_b", max_iter: int = 50
 ) -> DataFrame:
-    """Connected components over a pair graph via alternating
-    large-star / small-star rounds (the MapReduce CC algorithm of
-    Kiveris et al.): each round is two groupBy-min + join passes over
-    the edge set, and the component diameter shrinks geometrically —
-    O(log² n) rounds even for adversarial chains, where plain min-label
-    propagation needs diameter-many rounds.  Returns
-    (doc_id, cluster_id) with cluster_id = min id in the component.
+    """Connected components over a pair graph.  Returns
+    (doc_id long, cluster_id long), one row per doc that appears in a
+    non-loop pair, with cluster_id = min id in the component.
 
     This is the *correct* canonical-representative semantics for
     duplicate chains a~b~c where a≁c (the greedy smaller-id policy in
     :func:`near_dedup_jaccard` handles cliques but not chains).
 
-    Scale: the edge set only contains docs that matched something —
-    tiny relative to the corpus.  Every round ends in an eager
-    ``localCheckpoint()``, so lineage stays flat regardless of round
-    count (no exponentially growing plan, no recomputation storms) and
-    the convergence signature reuses the materialized result."""
+    The cleaned edge set (ids cast to long, loops dropped, distinct) is
+    staged, and one bounded ``toArrow()`` of at most
+    ``_LOCAL_CC_EDGES + 1`` of its rows both materializes the stage and
+    measures it.  Two regimes, chosen by that observed size:
+
+    * **driver** (at most ``_LOCAL_CC_EDGES`` edges): an exact
+      union-find in which the smaller root always wins, so every root
+      is its component's minimum; the labels go back through
+      ``createDataFrame`` of an Arrow table.  Neither Arrow call starts
+      a Python worker, whatever the session's Arrow conf says.
+    * **distributed** (more edges): alternating large-star / small-star
+      rounds (the MapReduce CC algorithm of Kiveris et al.), each two
+      groupBy-min + join passes over the edge set; the component
+      diameter shrinks geometrically — O(log² n) rounds even for
+      adversarial chains.  Each round is staged lazily and its
+      convergence-signature aggregate is the materializing action, so
+      lineage stays flat whatever the round count.
+
+    ``max_iter`` bounds only the distributed rounds (the union-find has
+    no iterations); exhausting it raises rather than return conflicting
+    labels."""
     id_types = {f.name: f.dataType.typeName() for f in pairs.schema.fields}
     numeric = {"byte", "short", "integer", "long"}
     for col in (a, b):
@@ -801,9 +826,16 @@ def connected_components(
     e = stage(
         pairs.select(F.col(a).cast("long").alias("u"), F.col(b).cast("long").alias("v"))
         .filter(F.col("u") != F.col("v"))
-        .distinct(),
-        eager=True,
+        .distinct()
     )
+    # LAZY stage: this bounded read is its materializing action (the
+    # limit's map side computes, and so caches, every partition), so the
+    # rounds' three concurrent reads of e hit materialized blocks
+    head = e.limit(_LOCAL_CC_EDGES + 1).toArrow()
+    if head.num_rows <= _LOCAL_CC_EDGES:
+        return e.sparkSession.createDataFrame(
+            _component_minima(head.column("u").to_numpy(), head.column("v").to_numpy())
+        )
     prev_sig = None
     converged = False
     for _ in range(max_iter):
@@ -847,6 +879,39 @@ def connected_components(
     members = e.select(F.col("u").alias("doc_id"), F.col("v").alias("cluster_id"))
     roots = e.select(F.col("v").alias("doc_id"), F.col("v").alias("cluster_id")).distinct()
     return members.unionAll(roots).distinct()
+
+
+def _component_minima(u, v):
+    """Driver-side connected components of the edges ``zip(u, v)``
+    (int64 arrays, no NULLs): an Arrow table (doc_id, cluster_id) with
+    one row per node, cluster_id = min id of its component.  Ids are
+    densified in ascending order, so the smaller dense root is also the
+    smaller id, and a union-find in which the smaller root always wins
+    leaves each component rooted at its minimum."""
+    import numpy as np
+    import pyarrow as pa
+
+    nodes, dense = np.unique(np.concatenate([u, v]), return_inverse=True)
+    parent = list(range(len(nodes)))  # parent[x] <= x throughout
+
+    def find(x):
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]  # path halving
+            x = parent[x]
+        return x
+
+    dense = dense.tolist()
+    for x, y in zip(dense[: len(u)], dense[len(u):]):
+        rx, ry = find(x), find(y)
+        if rx != ry:
+            parent[max(rx, ry)] = min(rx, ry)
+    # ascending order sees parent[x] (<= x) already resolved to its root
+    for x in range(len(parent)):
+        parent[x] = parent[parent[x]]
+    return pa.table({
+        "doc_id": pa.array(nodes, pa.int64()),
+        "cluster_id": pa.array(nodes[np.asarray(parent, np.int64)], pa.int64()),
+    })
 
 
 #: Default document-frequency cap for :func:`near_dedup_jaccard`.  A

@@ -50,6 +50,18 @@ def with_jobs(spark):
     return run
 
 
+@pytest.fixture(params=["driver", "rounds"])
+def cc_regime(request, monkeypatch):
+    """Run a test in each ``connected_components`` regime: ``driver``
+    (the union-find every small test graph takes by default) and
+    ``rounds`` (the distributed loop, forced by a zero edge bound)."""
+    if request.param == "rounds":
+        from spear_spark.operators import dedup
+
+        monkeypatch.setattr(dedup, "_LOCAL_CC_EDGES", 0)
+    return request.param
+
+
 @pytest.fixture
 def checkpoint_dir(spark, tmp_path):
     """A checkpoint dir for reliable staging; the session's previous

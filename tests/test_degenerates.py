@@ -248,24 +248,34 @@ def test_graph_family_degenerates(spark):
     """Graph-family conventions: pagerank REFUSES an empty edge list
     (iterating over zero nodes returns an empty rank table that reads
     as 'no data' when the real cause is an upstream join bug — the
-    empty-fit loud-raise convention); connected_components emits
-    NOTHING for an empty edge set AND for self-loop-only input (the
-    u != v filter drops loops — a doc paired only with itself is a
-    singleton, and the labeling contract is 'only docs that matched
-    something'; every caller coalesces missing labels to the doc's own
-    id, so loops must not mint one-member clusters)."""
+    empty-fit loud-raise convention).  connected_components' empty and
+    self-loop conventions are pinned per regime below."""
     import pytest as _pytest
 
-    from spear_spark.operators.dedup import connected_components
     from spear_spark.operators.graph import pagerank
 
     empty_e = spark.createDataFrame([], "src string, dst string")
     with _pytest.raises(ValueError, match="empty edge list"):
         pagerank(empty_e, "src", "dst", iters=2)
 
-    empty_p = spark.createDataFrame([], "doc_a long, doc_b long")
-    assert connected_components(empty_p).count() == 0
-    loops = spark.createDataFrame(
-        [(1, 1), (2, 2)], "doc_a long, doc_b long"
-    )
-    assert connected_components(loops).count() == 0
+
+def test_connected_components_degenerates(spark, cc_regime):
+    """connected_components emits NOTHING for an empty edge set AND for
+    self-loop-only input (the u != v filter drops loops — a doc paired
+    only with itself is a singleton, and the labeling contract is 'only
+    docs that matched something'; every caller coalesces missing labels
+    to the doc's own id, so loops must not mint one-member clusters).
+    Loops beside a real pair leave just that pair's two rows.  The
+    schema is (doc_id long, cluster_id long) in every case."""
+    from spear_spark.operators.dedup import connected_components
+
+    schema = "doc_a long, doc_b long"
+    for rows, expect in (
+        ([], []),
+        ([(1, 1), (2, 2)], []),
+        ([(1, 1), (3, 2), (2, 2), (3, 3)], [(2, 2), (3, 2)]),
+    ):
+        labels = connected_components(spark.createDataFrame(rows, schema))
+        assert labels.schema.simpleString() == "struct<doc_id:bigint,cluster_id:bigint>"
+        assert all(f.nullable for f in labels.schema.fields)
+        assert sorted(map(tuple, labels.collect())) == expect

@@ -2,6 +2,9 @@
 (the oracle suite covers them on real testdata; these pin semantics on
 hand-built edge cases)."""
 
+import os
+
+import pytest
 from pyspark.sql import functions as F
 
 from spear_spark.operators import dedup, similarity, text
@@ -315,7 +318,7 @@ class TestApproximateAggregates:
 
 
 class TestConnectedComponents:
-    def test_chain_vs_greedy(self, ctx):
+    def test_chain_vs_greedy(self, ctx, cc_regime):
         """a~b~c chain: CC assigns all three to cluster min; greedy
         pair-drop would handle it too, but CC also gets c when (a,c)
         never paired directly."""
@@ -331,12 +334,15 @@ class TestConnectedComponents:
         assert got == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10,
                        20: 20, 21: 20, 22: 20, 23: 20}
 
-    def test_adversarial_chain_100(self, ctx):
+    def test_adversarial_chain_100(self, ctx, monkeypatch):
         """Path graph of diameter 100: plain min-propagation needs ~100
         rounds; large-star/small-star converges in O(log² n).  max_iter=12
         would time out the old implementation — the chain must still fully
-        collapse to cluster 1, with lineage kept flat by localCheckpoint."""
+        collapse to cluster 1, with lineage kept flat by localCheckpoint.
+        Pins the distributed rounds (forced by a zero edge bound)."""
         from spear_spark.operators.dedup import connected_components
+
+        monkeypatch.setattr(dedup, "_LOCAL_CC_EDGES", 0)
 
         pairs = ctx.lift(
             [(i, i + 1) for i in range(1, 101)], "doc_a: long, doc_b: long"
@@ -347,7 +353,7 @@ class TestConnectedComponents:
         }
         assert got == {i: 1 for i in range(1, 102)}
 
-    def test_random_graph_vs_union_find(self, ctx):
+    def test_random_graph_vs_union_find(self, ctx, cc_regime):
         """Random pair graph vs a driver-side union-find oracle."""
         import random
 
@@ -392,16 +398,89 @@ class TestConnectedComponents:
         with pytest.raises(TypeError, match="integral ids"):
             connected_components(pairs)
 
-    def test_exhausted_max_iter_raises(self, ctx):
+    def test_exhausted_max_iter_raises(self, ctx, monkeypatch):
         """If the loop exits before the edge-set signature stabilizes,
-        labels could conflict — never return silently (ADVICE r2)."""
+        labels could conflict — never return silently (ADVICE r2).  Only
+        the distributed rounds iterate, so the zero edge bound forces
+        them."""
         import pytest
 
         from spear_spark.operators.dedup import connected_components
 
+        monkeypatch.setattr(dedup, "_LOCAL_CC_EDGES", 0)
+
         pairs = ctx.lift([(1, 2), (2, 3)], "doc_a: long, doc_b: long").df
         with pytest.raises(RuntimeError, match="did not converge"):
             connected_components(pairs, max_iter=1)
+
+    def test_edge_bound_boundary(self, spark, monkeypatch):
+        """Exactly ``_LOCAL_CC_EDGES`` edges take the driver union-find;
+        one more takes the distributed rounds.  Disjoint pairs
+        (2i, 2i+1) keep the rounds to a couple of passes."""
+        from spear_spark.operators.dedup import _LOCAL_CC_EDGES, connected_components
+
+        driver_calls = []
+        solve = dedup._component_minima
+
+        def counting_solve(u, v):
+            driver_calls.append(len(u))
+            return solve(u, v)
+
+        monkeypatch.setattr(dedup, "_component_minima", counting_solve)
+        for n_edges, expect_calls in ((_LOCAL_CC_EDGES, [_LOCAL_CC_EDGES]), (_LOCAL_CC_EDGES + 1, [])):
+            driver_calls.clear()
+            pairs = spark.range(n_edges).select(
+                (F.col("id") * 2).alias("doc_a"), (F.col("id") * 2 + 1).alias("doc_b")
+            )
+            labels = connected_components(pairs)
+            assert driver_calls == expect_calls
+            got = labels.agg(
+                F.count(F.lit(1)).alias("n"),
+                F.sum((F.col("cluster_id") != F.col("doc_id") - F.col("doc_id") % 2).cast("int"))
+                .alias("wrong"),
+            ).first()
+            assert (got.n, got.wrong) == (2 * n_edges, 0)
+
+    def test_small_graph_job_census(self, spark, with_jobs):
+        """A small staged edge set costs at most 2 jobs before the
+        result's own action: the edge stage (AQE runs the distinct's
+        shuffle map stage as it plans the checkpoint) and the bounded
+        read that materializes it.  The rounds cost ~8 jobs each."""
+        from spear_spark.config import stage
+        from spear_spark.operators.dedup import connected_components
+
+        pairs = stage(
+            spark.createDataFrame([(1, 2), (2, 3), (5, 4), (7, 8), (3, 9)], "doc_a long, doc_b long"),
+            eager=True,
+        )
+        labels, jobs = with_jobs(lambda: connected_components(pairs))
+        assert jobs <= 2
+        assert sorted(map(tuple, labels.collect())) == [
+            (1, 1), (2, 1), (3, 1), (4, 4), (5, 4), (7, 7), (8, 7), (9, 1)
+        ]
+
+    @pytest.mark.parametrize("query", [
+        "p21_dup_clusters", "p88_cluster_representatives", "p102_dedup_report",
+        "p106_dup_cluster_profile", "p131_split_leakage", "p135_leakage_split_cc",
+        "p137_dedup_report_chunks",
+    ])
+    def test_catalog_rows_identical_across_regimes(self, spark, sf_dir, monkeypatch, query):
+        """The seven catalog queries built on connected components give
+        the same schema and rows in both regimes on the sf0.01 tables
+        (next to the default sf0.001 ones)."""
+        from collections import Counter
+
+        from spear_spark.operators import catalog
+
+        sf001 = os.path.join(os.path.dirname(sf_dir), "sf0.01")
+        build = getattr(catalog, query)
+        by_regime = []
+        for bound in (dedup._LOCAL_CC_EDGES, 0):
+            monkeypatch.setattr(dedup, "_LOCAL_CC_EDGES", bound)
+            df = build(spark, sf001)
+            by_regime.append((df.schema, Counter(map(tuple, df.collect()))))
+        assert by_regime[0] == by_regime[1]
+        assert by_regime[0][1]
 
 
 class TestDecodeBackendGate:
